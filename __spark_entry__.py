@@ -7,6 +7,7 @@ provides DuckDB-equivalent SQL for the driver's side-by-side check.
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -18,226 +19,56 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from csv_to_jsonld_processor_spark.plans.relational import RELATIONAL_QUERIES
 
 
+# Every query family, in registry order. An import error propagates: a
+# broken module must fail loudly, not silently drop its queries.
+_QUERY_FAMILIES: tuple[tuple[str, str], ...] = (
+    ("plans.relational", "RELATIONAL_QUERIES"),
+    ("plans.relational2", "RELATIONAL2_QUERIES"),
+    ("plans.relational3", "RELATIONAL3_QUERIES"),
+    ("plans.relational4", "RELATIONAL4_QUERIES"),
+    ("operators.textops", "TEXT_QUERIES"),
+    ("operators.dedup", "DEDUP_QUERIES"),
+    ("operators.curation", "CURATION_QUERIES"),
+    ("operators.upsert", "UPSERT_QUERIES"),
+    ("operators.eventops", "EVENTOPS_QUERIES"),
+    ("operators.inference", "INFERENCE_QUERIES"),
+    ("operators.sketches", "SKETCH_QUERIES"),
+    ("plans.sql_surface", "SQL_SURFACE_QUERIES"),
+    ("operators.snapshots", "SNAPSHOT_QUERIES"),
+    ("operators.similarity", "SIMILARITY_QUERIES"),
+    ("kg.queries", "KG_QUERIES"),
+    ("kg.incremental", "KG_INCREMENTAL_QUERIES"),
+    ("operators.urlops", "URL_QUERIES"),
+    ("operators.layout", "LAYOUT_QUERIES"),
+    ("kg.graphalgs", "KG_GRAPHALG_QUERIES"),
+    ("kg.reasoning", "KG_REASONING_QUERIES"),
+    ("kg.triplestore", "KG_TRIPLESTORE_QUERIES"),
+    ("streaming.events", "STREAMING_QUERIES"),
+    ("streaming.kgstream", "KG_STREAM_QUERIES"),
+    ("sources.jsonld", "JSONLD_QUERIES"),
+    ("kg.rules", "KG_RULE_QUERIES"),
+    ("kg.lineage_audit", "KG_LINEAGE_QUERIES"),
+    ("kg.er", "KG_ER_QUERIES"),
+    ("operators.search", "SEARCH_QUERIES"),
+    ("kg.canonical", "KG_CANONICAL_QUERIES"),
+    ("kg.bgp", "KG_BGP_QUERIES"),
+    ("sources.warc", "WARC_QUERIES"),
+    ("kg.rdfio", "KG_RDFIO_QUERIES"),
+    ("kg.turtle", "KG_TURTLE_QUERIES"),
+    ("kg.shacl", "KG_SHACL_QUERIES"),
+    ("kg.mlprep", "KG_MLPREP_QUERIES"),
+    ("sources.multimodal", "MULTIMODAL_QUERIES"),
+)
+
+
 def _registry() -> dict[str, tuple]:
     reg: dict[str, tuple] = {}
-    reg.update(RELATIONAL_QUERIES)
-    try:
-        from csv_to_jsonld_processor_spark.plans.relational2 import RELATIONAL2_QUERIES
+    for module, attr in _QUERY_FAMILIES:
+        reg.update(getattr(importlib.import_module(f"csv_to_jsonld_processor_spark.{module}"), attr))
+    from csv_to_jsonld_processor_spark.plans.fixture_queries import FIXTURE_QUERIES, FIXTURES
 
-        reg.update(RELATIONAL2_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.plans.relational3 import RELATIONAL3_QUERIES
-
-        reg.update(RELATIONAL3_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.plans.relational4 import RELATIONAL4_QUERIES
-
-        reg.update(RELATIONAL4_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.textops import TEXT_QUERIES
-
-        reg.update(TEXT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.dedup import DEDUP_QUERIES
-
-        reg.update(DEDUP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.curation import CURATION_QUERIES
-
-        reg.update(CURATION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.upsert import UPSERT_QUERIES
-
-        reg.update(UPSERT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.eventops import EVENTOPS_QUERIES
-
-        reg.update(EVENTOPS_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.inference import INFERENCE_QUERIES
-
-        reg.update(INFERENCE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.sketches import SKETCH_QUERIES
-
-        reg.update(SKETCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.plans.sql_surface import SQL_SURFACE_QUERIES
-
-        reg.update(SQL_SURFACE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.snapshots import SNAPSHOT_QUERIES
-
-        reg.update(SNAPSHOT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.similarity import SIMILARITY_QUERIES
-
-        reg.update(SIMILARITY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.queries import KG_QUERIES
-
-        reg.update(KG_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.incremental import KG_INCREMENTAL_QUERIES
-
-        reg.update(KG_INCREMENTAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.urlops import URL_QUERIES
-
-        reg.update(URL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.layout import LAYOUT_QUERIES
-
-        reg.update(LAYOUT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.graphalgs import KG_GRAPHALG_QUERIES
-
-        reg.update(KG_GRAPHALG_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.reasoning import KG_REASONING_QUERIES
-
-        reg.update(KG_REASONING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.triplestore import KG_TRIPLESTORE_QUERIES
-
-        reg.update(KG_TRIPLESTORE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.streaming.events import STREAMING_QUERIES
-
-        reg.update(STREAMING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.streaming.kgstream import KG_STREAM_QUERIES
-
-        reg.update(KG_STREAM_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.sources.jsonld import JSONLD_QUERIES
-
-        reg.update(JSONLD_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.rules import KG_RULE_QUERIES
-
-        reg.update(KG_RULE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.lineage_audit import KG_LINEAGE_QUERIES
-
-        reg.update(KG_LINEAGE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.er import KG_ER_QUERIES
-
-        reg.update(KG_ER_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.operators.search import SEARCH_QUERIES
-
-        reg.update(SEARCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.canonical import KG_CANONICAL_QUERIES
-
-        reg.update(KG_CANONICAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.bgp import KG_BGP_QUERIES
-
-        reg.update(KG_BGP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.sources.warc import WARC_QUERIES
-
-        reg.update(WARC_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.rdfio import KG_RDFIO_QUERIES
-
-        reg.update(KG_RDFIO_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.turtle import KG_TURTLE_QUERIES
-
-        reg.update(KG_TURTLE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.shacl import KG_SHACL_QUERIES
-
-        reg.update(KG_SHACL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.kg.mlprep import KG_MLPREP_QUERIES
-
-        reg.update(KG_MLPREP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.sources.multimodal import MULTIMODAL_QUERIES
-
-        reg.update(MULTIMODAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from csv_to_jsonld_processor_spark.plans.fixture_queries import FIXTURE_QUERIES
-
-        if os.path.isdir("/root/reference/test-data"):
-            reg.update(FIXTURE_QUERIES)
-    except ImportError:
-        pass
+    if os.path.isdir(FIXTURES):
+        reg.update(FIXTURE_QUERIES)
     return _rotate_stale_first(reg)
 
 

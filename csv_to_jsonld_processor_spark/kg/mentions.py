@@ -2,14 +2,15 @@
 
 The web-text analog of the reference's cell→typed-value step (SURVEY
 §7.0): a page's sentences are "rows", predicate surface phrases are the
-"headers", and mentions are the "cell values". Runs as ``mapInPandas``
-over whole partitions (Arrow batches; no per-row Python calls back to
-the JVM) per BASELINE.json input_hint.
+"headers", and mentions are the "cell values". Runs as ONE
+``mapInPandas`` stage over whole partitions (Arrow batches; no per-row
+Python calls back to the JVM) per BASELINE.json input_hint: HTML→text,
+mentions and, when the KB rides along, linking — all in one pass.
 
 Extraction is pattern-based and deterministic: for each sentence,
 the first predicate surface phrase found splits it into a subject
 mention (left) and object mention (right). Surface phrases come from
-the broadcast predicate context (kg/canonicalize.py) — the analog of
+the predicate context (``kg/graph.predicate_context``) — the analog of
 the reference mapping CSV headers through the vocabulary (P1/P5).
 """
 
@@ -23,6 +24,11 @@ from pyspark.sql import functions as F
 
 MENTIONS_SCHEMA = (
     "url string, sent_idx int, subj_mention string, pred_surface string, obj_mention string"
+)
+
+LINKED_SCHEMA = MENTIONS_SCHEMA + (
+    ", subj_mention_entity string, subj_mention_class string, subj_mention_score double"
+    ", obj_mention_entity string, obj_mention_class string, obj_mention_score double"
 )
 
 # sentence split on ". " except after an initial ("A. Lovelace")
@@ -70,68 +76,35 @@ def _extract_from_text(
     return rows
 
 
-def extract_mentions(
-    pages: DataFrame,
-    surfaces: list[str],
-    gazetteer: list[str],
-    text_col: str = "extracted_text",
-    lang_filter: str | None = "en",
-) -> DataFrame:
-    """pages(url, ..., text) → mention triples. Filter first (predicate
-    pushdown to the scan), then Arrow-batched extraction; longest
-    surfaces are tried first so 'is the founder of' wins over 'founded'.
-
-    Mention detection is gazetteer-NER (alias surface forms); the
-    *linking* stage still owns disambiguation — the same surface can map
-    to several canonical entities."""
-    import pandas as pd
-
-    ordered = _padded(sorted(surfaces, key=len, reverse=True))
-    gaz = _compile_gazetteer(gazetteer)
-    src = pages
-    if lang_filter is not None and "lang" in pages.columns:
-        src = src.where(F.col("lang") == lang_filter)
-    src = src.select("url", text_col)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, text in zip(pdf["url"], pdf[text_col]):
-                if text:
-                    rows.extend(_extract_from_text(url, text, ordered, gaz))
-            yield pd.DataFrame(
-                rows, columns=["url", "sent_idx", "subj_mention", "pred_surface", "obj_mention"]
-            )
-
-    return src.mapInPandas(run, schema=MENTIONS_SCHEMA)
-
-
-LINKED_SCHEMA = MENTIONS_SCHEMA + (
-    ", subj_mention_entity string, subj_mention_class string, subj_mention_score double"
-    ", obj_mention_entity string, obj_mention_class string, obj_mention_score double"
-)
-
-
 def extract_link_from_html(
     pages: DataFrame,
     surfaces: list[str],
     gazetteer: list[str],
-    idx: dict,
-    lang_filter: str | None = "en",
+    idx: dict | None,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fully fused HTML→text→mentions→LINK in one mapInPandas stage.
+    """pages(url, html[, lang]) → mention triples in ONE mapInPandas stage.
 
-    When the KB is dimension-sized it rides into the UDF as a broadcast
-    dict and linking needs no join at all — the whole pipeline becomes a
-    single shuffle-free scan (the 100 TB fast path; hub-entity skew is
-    moot because every partition resolves its own mentions locally).
-    The output matches link_mentions(broadcast|salted_shuffle) exactly.
+    Only ``lang == 'en'`` pages are read when a ``lang`` column exists
+    (a filter before the stage, so it pushes down to the scan); rows with
+    ``html`` None emit nothing. Longest surfaces are tried first so 'is
+    the founder of' wins over 'founded'. Mention detection is
+    gazetteer-NER; linking owns disambiguation.
+
+    With ``idx`` (``kb_index``) the KB rides into the UDF as a broadcast
+    dict and the six ``*_mention_{entity,class,score}`` columns are
+    filled in place (LINKED_SCHEMA) — the shuffle-free fast path, equal
+    to ``link_mentions(broadcast|salted_shuffle)``. With ``idx=None`` the
+    output is MENTIONS_SCHEMA for join-based linking.
+
+    The binary ``html`` column is the widest in the table and Catalyst
+    cannot column-prune through a mapInPandas barrier, so it crosses
+    Arrow exactly once. ``extract_pages`` stays the golden-hash surface;
+    both call the same pinned ``extract_text``.
 
     ``passthrough`` names page columns to replicate onto each emitted
     row (e.g. ``("warc_ts",)`` so streaming aggregations can watermark
-    on crawl time). Empty by default — the hot path is byte-identical
-    to the benchmarked round-2 stage when unused.
+    on crawl time).
     """
     import pandas as pd
 
@@ -140,84 +113,49 @@ def extract_link_from_html(
 
     ordered = _padded(sorted(surfaces, key=len, reverse=True))
     gaz = _compile_gazetteer(gazetteer)
-    src = pages
-    if lang_filter is not None and "lang" in pages.columns:
-        src = src.where(F.col("lang") == lang_filter)
+    src = pages.where(F.col("lang") == "en") if "lang" in pages.columns else pages
     src = src.select("url", "html", *passthrough)
-    bidx = src.sparkSession.sparkContext.broadcast(idx)
+    bidx = None if idx is None else src.sparkSession.sparkContext.broadcast(idx)
 
-    cols = [
-        "url", "sent_idx", "subj_mention", "pred_surface", "obj_mention",
-        "subj_mention_entity", "subj_mention_class", "subj_mention_score",
-        "obj_mention_entity", "obj_mention_class", "obj_mention_score",
-    ] + list(passthrough)
-    schema = LINKED_SCHEMA
+    schema = MENTIONS_SCHEMA if idx is None else LINKED_SCHEMA
     if passthrough:
-        extra = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
-        schema += ", " + ", ".join(f"{c} {extra[c]}" for c in passthrough)
+        types = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
+        schema += "".join(f", {c} {types[c]}" for c in passthrough)
+    cols = [field.split(" ")[0] for field in schema.split(", ")]
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        local_idx = bidx.value
-        cache: dict[str, tuple] = {}
+        if bidx is None:
+            def expand(row: tuple) -> tuple:
+                return row
+        else:
+            local_idx = bidx.value
+            cache: dict[str, tuple] = {}
 
-        def link(m: str):
-            r = cache.get(m)
-            if r is None:
-                r = resolve_mention(m, local_idx) or (None, None, None)
-                cache[m] = r
-            return r
+            def link(m: str) -> tuple:
+                r = cache.get(m)
+                if r is None:
+                    r = resolve_mention(m, local_idx) or (None, None, None)
+                    cache[m] = r
+                return r
+
+            def expand(row: tuple) -> tuple:
+                return row + link(row[2]) + link(row[4])
 
         for pdf in batches:
             rows: list[tuple] = []
-            extras_cols = [pdf[c] for c in passthrough]
-            for url, html, *extras in zip(pdf["url"], pdf["html"], *extras_cols):
+            for url, html, *extras in zip(pdf["url"], pdf["html"], *(pdf[c] for c in passthrough)):
                 if html is None:
                     continue
-                text = extract_text(bytes(html))
-                for u, si, subj, surf, obj in _extract_from_text(url, text, ordered, gaz):
-                    se, sc, ss = link(subj)
-                    oe, oc, os_ = link(obj)
-                    rows.append((u, si, subj, surf, obj, se, sc, ss, oe, oc, os_, *extras))
+                extras = tuple(extras)
+                for row in _extract_from_text(url, extract_text(bytes(html)), ordered, gaz):
+                    rows.append(expand(row) + extras)
             yield pd.DataFrame(rows, columns=cols)
 
     return src.mapInPandas(run, schema=schema)
 
 
 def extract_mentions_from_html(
-    pages: DataFrame,
-    surfaces: list[str],
-    gazetteer: list[str],
-    lang_filter: str | None = "en",
+    pages: DataFrame, surfaces: list[str], gazetteer: list[str]
 ) -> DataFrame:
-    """Fused HTML→text→mentions in ONE mapInPandas stage.
-
-    Two separate pandas stages would round-trip the binary ``html``
-    column (the widest column in the table) through Arrow twice —
-    Catalyst cannot column-prune through a mapInPandas barrier. Fusing
-    halves Arrow traffic and drops a full Python-worker stage; this is
-    the production path, while extract_pages stays the golden-hash
-    surface (both call the same pinned ``extract_text``).
-    """
-    import pandas as pd
-
-    from ..extract import extract_text
-
-    ordered = _padded(sorted(surfaces, key=len, reverse=True))
-    gaz = _compile_gazetteer(gazetteer)
-    src = pages
-    if lang_filter is not None and "lang" in pages.columns:
-        src = src.where(F.col("lang") == lang_filter)
-    src = src.select("url", "html")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if html is not None:
-                    text = extract_text(bytes(html))
-                    rows.extend(_extract_from_text(url, text, ordered, gaz))
-            yield pd.DataFrame(
-                rows, columns=["url", "sent_idx", "subj_mention", "pred_surface", "obj_mention"]
-            )
-
-    return src.mapInPandas(run, schema=MENTIONS_SCHEMA)
+    """The unlinked stage (MENTIONS_SCHEMA) for join-based linking."""
+    return extract_link_from_html(pages, surfaces, gazetteer, None)

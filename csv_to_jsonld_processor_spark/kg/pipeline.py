@@ -1,8 +1,9 @@
 """End-to-end web-text KG construction pipeline (north_star flow):
 
-pages (Iceberg/parquet) → extract text (mapInPandas, byte-pinned)
-→ mention + triple extraction (mapInPandas)
-→ entity linking (blocked join, broadcast or salted shuffle)
+pages (Iceberg/parquet) → ONE mapInPandas stage (byte-pinned text
+extraction → mention + triple extraction → entity linking against the
+broadcast KB dict; join-based strategies run it unlinked and link by
+blocked join, broadcast or salted shuffle)
 → predicate canonicalization (broadcast @context)
 → SHACL-style validation → entities/predicates/edges (+violations)
 with per-partition lineage when a ledger dir is given.
@@ -12,9 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..extract import extract_pages
 from ..sources.pages import ENTITIES, PREDICATES
-from .mentions import extract_link_from_html, extract_mentions, extract_mentions_from_html
+from .mentions import extract_link_from_html, extract_mentions_from_html
 from .graph import (
     canonicalize_edges,
     materialize_graph,
@@ -50,19 +50,17 @@ def build_kg(
 ) -> dict:
     """Returns dict with edges/violations DataFrames and (if out_dir)
     materialized table counts."""
+    if "html" not in pages.columns:
+        raise ValueError(f"build_kg: pages needs an 'html' column, got {pages.columns}")
     surfaces = [p[0] for p in predicates]
     gazetteer = [a for _c, aliases, _cls in entities for a in aliases]
 
-    if link_strategy == "fused_broadcast" and "html" in pages.columns:
+    if link_strategy == "fused_broadcast":
         # dimension-sized KB: extract+link in ONE shuffle-free scan with
         # the KB broadcast as a dict (the reference's hash-map lookups)
         linked = extract_link_from_html(pages, surfaces, gazetteer, kb_index(entities))
     else:
-        if "html" in pages.columns:
-            # fused single-stage path: no Arrow round-trip of the html bytes
-            mentions = extract_mentions_from_html(pages, surfaces, gazetteer)
-        else:
-            mentions = extract_mentions(extract_pages(pages), surfaces, gazetteer)
+        mentions = extract_mentions_from_html(pages, surfaces, gazetteer)
         kb = kb_alias_table(spark, entities)
         linked = link_mentions(mentions, kb, "subj_mention", strategy=link_strategy)
         linked = link_mentions(linked, kb, "obj_mention", strategy=link_strategy)

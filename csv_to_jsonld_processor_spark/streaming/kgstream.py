@@ -22,6 +22,15 @@ per-partition lineage ledger of the batch path (kg/lineage.py).
 Oracle: the generator-anchored golden edge CSV (the same truth that
 gates the batch pipeline) aggregated by plain SQL — the streaming
 engine never sees it.
+
+The same stages also run over a file source of crawled pages
+(``kg_edges_stream``: append-mode sink into the edges table the batch
+job writes, lineage per micro-batch), and windowed aggregations stream
+too — ``kg_edge_window_counts_stream`` keeps per-(event-time window,
+predicate) edge counts with a watermark on crawl time bounding the
+state. Whole-graph stages (global entity dedup, PageRank) stay
+batch/periodic — they need the full graph, which is why the pipeline
+splits exactly there.
 """
 
 from __future__ import annotations
@@ -30,24 +39,83 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checksum import u32
-from ..sources.pages import ENTITIES, PREDICATES
+from ..sources.pages import ENTITIES, PAGES_SCHEMA, PREDICATES
 from ..kg.graph import canonicalize_edges, predicate_context
 from ..kg.link import kb_index
 from ..kg.mentions import extract_link_from_html
+from .events import run_stream_over_dir
 
 _US = "\x1f"
+
+_SURFACES = [p[0] for p in PREDICATES]
+_GAZETTEER = [a for _c, aliases, _cls in ENTITIES for a in aliases]
+_KB_IDX = kb_index(ENTITIES)
+_CTX = predicate_context(PREDICATES)
 
 
 def stream_edges(pages_stream: DataFrame) -> DataFrame:
     """The batch construction pipeline applied to a streaming pages
     DataFrame — same code path, stateless stage for stage."""
-    surfaces = [p[0] for p in PREDICATES]
-    gazetteer = [a for _c, aliases, _cls in ENTITIES for a in aliases]
-    linked = extract_link_from_html(
-        pages_stream, surfaces, gazetteer, kb_index(ENTITIES)
-    )
-    edges, _viol = canonicalize_edges(linked, predicate_context(PREDICATES))
+    linked = extract_link_from_html(pages_stream, _SURFACES, _GAZETTEER, _KB_IDX)
+    edges, _viol = canonicalize_edges(linked, _CTX)
     return edges
+
+
+def kg_edges_stream(spark: SparkSession, pages_dir: str, query_name: str = "kg_edges_stream") -> DataFrame:
+    """readStream over a pages directory → fused extract+link+canonicalize
+    → drained append-mode memory sink (availableNow). Returns the edge
+    table; equals build_kg(...)["edges"] on the same input."""
+    return run_stream_over_dir(
+        spark, pages_dir, stream_edges, PAGES_SCHEMA, query_name, output_mode="append"
+    )
+
+
+def kg_edge_window_counts_stream(
+    spark: SparkSession,
+    pages_dir: str,
+    query_name: str = "kg_edge_window_stream",
+    watermark: str = "1 hour",
+    window: str = "1 day",
+) -> DataFrame:
+    """Stateful incremental KG aggregation: per-(event-time window, pred)
+    edge counts over the streaming pipeline, with a watermark on
+    ``warc_ts`` (crawl time) bounding the aggregation state.
+    Late pages within the watermark still update their window; state for
+    windows older than the watermark is evicted, so memory is bounded by
+    (watermark span / window span) × |predicates| regardless of corpus
+    size.
+
+    ``warc_ts`` rides through the fused UDF via its ``passthrough``
+    hook and the watermark is declared on the UDF OUTPUT (a mapInPandas
+    barrier produces new attributes, so a pre-UDF watermark would not
+    propagate). Predicate canonicalization is the same broadcast
+    @context lookup as kg/graph.py, applied as a literal map column
+    (``canonicalize_edges`` would drop ``warc_ts``); rows failing linking
+    or context lookup are dropped exactly as canonicalize_edges routes
+    them to violations. Drained complete-mode for the bounded
+    stream==batch test (run_stream_over_dir explains why); production
+    runs append with windows finalizing as the watermark passes them."""
+    pred_map = F.create_map(*[F.lit(x) for kv in _CTX.items() for x in kv])
+
+    def transform(stream: DataFrame) -> DataFrame:
+        linked = extract_link_from_html(
+            stream, _SURFACES, _GAZETTEER, _KB_IDX, passthrough=("warc_ts",)
+        )
+        edges = linked.withColumn("pred", pred_map[F.col("pred_surface")]).where(
+            F.col("subj_mention_entity").isNotNull()
+            & F.col("obj_mention_entity").isNotNull()
+            & F.col("pred").isNotNull()
+        )
+        return (
+            edges.withWatermark("warc_ts", watermark)
+            .groupBy(F.window("warc_ts", window).alias("w"), "pred")
+            .agg(F.count(F.lit(1)).alias("n_edges"))
+            .select(F.col("w.start").alias("window_start"), "pred", "n_edges")
+        )
+
+    return run_stream_over_dir(
+        spark, pages_dir, transform, PAGES_SCHEMA, query_name, output_mode="complete"
+    )
 
 
 def _edge_checksum() -> F.Column:

@@ -74,6 +74,16 @@ def test_kg_fused_equals_join(spark, pages):
     assert a == b
 
 
+def test_build_kg_rejects_pages_without_html(spark, pages):
+    """No html column is a call-time error naming the column, not a
+    KeyError from a Python worker at the first action."""
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    for strategy in ("fused_broadcast", "broadcast"):
+        with pytest.raises(ValueError, match="'html'"):
+            build_kg(spark, pages.drop("html"), link_strategy=strategy)
+
+
 def test_materialize_and_violations(spark, pages, tmp_path):
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
@@ -94,15 +104,14 @@ def test_resume_ledger_identical_output(spark, pages, tmp_path):
     from pyspark.sql import functions as F
 
     from csv_to_jsonld_processor_spark.kg.lineage import completed_parts, run_stage
-    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions
-    from csv_to_jsonld_processor_spark.extract import extract_pages
+    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions_from_html
     from csv_to_jsonld_processor_spark.sources.pages import ENTITIES, PREDICATES
 
     surfaces = [p[0] for p in PREDICATES]
     gazetteer = [a for _c, aliases, _cls in ENTITIES for a in aliases]
 
     def stage(df):
-        return extract_mentions(extract_pages(df), surfaces, gazetteer)
+        return extract_mentions_from_html(df, surfaces, gazetteer)
 
     # full run
     full_out = str(tmp_path / "full_out")
@@ -133,16 +142,15 @@ def test_resume_ledger_identical_output(spark, pages, tmp_path):
 def test_violations_routes(spark, pages):
     """A7 analog: link failures and unknown predicates become data, not
     exceptions — KB gap → unlinked_subject; context gap → unknown_predicate."""
-    from csv_to_jsonld_processor_spark.extract import extract_pages
     from csv_to_jsonld_processor_spark.kg.graph import canonicalize_edges, predicate_context
     from csv_to_jsonld_processor_spark.kg.link import kb_alias_table, link_mentions
-    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions
+    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions_from_html
     from csv_to_jsonld_processor_spark.sources.pages import ENTITIES, PREDICATES
 
     surfaces = [p[0] for p in PREDICATES]
     gaz = [a for _c, als, _k in ENTITIES for a in als]
     kb = kb_alias_table(spark, [e for e in ENTITIES if e[0] != "Alan Turing"])
-    m = extract_mentions(extract_pages(pages), surfaces, gaz)
+    m = extract_mentions_from_html(pages, surfaces, gaz)
     linked = link_mentions(link_mentions(m, kb, "subj_mention"), kb, "obj_mention")
     ctx = {k: v for k, v in predicate_context(PREDICATES).items() if k != "acquired"}
     edges, viol = canonicalize_edges(linked, ctx)
@@ -159,15 +167,14 @@ def test_resume_after_crash_before_ledger_commit(spark, pages, tmp_path):
     from pyspark.sql import functions as F
 
     from csv_to_jsonld_processor_spark.kg.lineage import completed_parts, run_stage
-    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions
-    from csv_to_jsonld_processor_spark.extract import extract_pages
+    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions_from_html
     from csv_to_jsonld_processor_spark.sources.pages import ENTITIES, PREDICATES
 
     surfaces = [p[0] for p in PREDICATES]
     gazetteer = [a for _c, aliases, _cls in ENTITIES for a in aliases]
 
     def stage(df):
-        return extract_mentions(extract_pages(df), surfaces, gazetteer)
+        return extract_mentions_from_html(df, surfaces, gazetteer)
 
     out = str(tmp_path / "out")
     ledger = str(tmp_path / "ledger")
@@ -229,7 +236,7 @@ def test_kg_stream_equals_batch(spark, pages, tmp_path):
     Structured Streaming job (file source, availableNow drain) and must
     produce exactly the batch edge set."""
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
-    from csv_to_jsonld_processor_spark.streaming.kg_stream import kg_edges_stream
+    from csv_to_jsonld_processor_spark.streaming.kgstream import kg_edges_stream
 
     d = str(tmp_path / "pages_stream")
     pages.repartition(4).write.mode("overwrite").parquet(d)
@@ -279,7 +286,7 @@ def test_kg_windowed_stream_agg_equals_batch(spark, pages, tmp_path):
     from pyspark.sql import functions as F
 
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
-    from csv_to_jsonld_processor_spark.streaming.kg_stream import (
+    from csv_to_jsonld_processor_spark.streaming.kgstream import (
         kg_edge_window_counts_stream,
     )
 
