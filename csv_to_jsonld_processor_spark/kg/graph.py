@@ -17,10 +17,8 @@ sandbox has no Iceberg jars, the layout is identical either way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-from ..iri import to_kebab_case
 
 KG_TERMS = "http://example.org/kg/terms/"
 KG_IDS = "http://example.org/kg/ids/"
@@ -200,9 +198,12 @@ def write_table(df: DataFrame, path_or_ident: str, partition_by: list[str] | Non
 
 def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> dict:
     """entities/predicates/edges/violations — entities deduped from both
-    edge endpoints (the reference's merge-by-@id A1 over the graph)."""
-    edges_b = with_bucket(edges)
-    write_table(edges_b, f"{out_dir}/edges", partition_by=["bucket"])
+    edge endpoints (the reference's merge-by-@id A1 over the graph).
+    Each table's row count is observed while it is written, not read back."""
+    def write(df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
+        obs = Observation()
+        write_table(df.observe(obs, F.count(F.lit(1)).alias("n")), f"{out_dir}/{name}", partition_by)
+        return obs.get["n"]
 
     subj_side = edges.select(
         F.col("subj").alias("iri"), F.col("subj_name").alias("label"),
@@ -213,19 +214,13 @@ def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> 
         F.col("obj_class").alias("entity_class"),
     )
     entities = subj_side.unionByName(obj_side).dropDuplicates(["iri"])
-    write_table(with_bucket(entities, "iri"), f"{out_dir}/entities", partition_by=["bucket"])
-
     predicates = (
         edges.groupBy("pred").agg(F.count(F.lit(1)).alias("n_edges"))
         .withColumnRenamed("pred", "iri")
     )
-    write_table(predicates, f"{out_dir}/predicates")
-    write_table(violations, f"{out_dir}/violations")
-
-    spark = edges.sparkSession
     return {
-        "edges": spark.read.parquet(f"{out_dir}/edges").count(),
-        "entities": spark.read.parquet(f"{out_dir}/entities").count(),
-        "predicates": spark.read.parquet(f"{out_dir}/predicates").count(),
-        "violations": spark.read.parquet(f"{out_dir}/violations").count(),
+        "edges": write(with_bucket(edges), "edges", ["bucket"]),
+        "entities": write(with_bucket(entities, "iri"), "entities", ["bucket"]),
+        "predicates": write(predicates, "predicates"),
+        "violations": write(violations, "violations"),
     }

@@ -7,6 +7,8 @@ blocked join, broadcast or salted shuffle)
 → predicate canonicalization (broadcast @context)
 → SHACL-style validation → entities/predicates/edges (+violations)
 with per-partition lineage when a ledger dir is given.
+With ``out_dir`` the linked relation is a lazy local checkpoint, computed
+once for every sink, so each page crosses into Python once.
 """
 
 from __future__ import annotations
@@ -64,6 +66,8 @@ def build_kg(
         kb = kb_alias_table(spark, entities)
         linked = link_mentions(mentions, kb, "subj_mention", strategy=link_strategy)
         linked = link_mentions(linked, kb, "obj_mention", strategy=link_strategy)
+    if out_dir:
+        linked = linked.localCheckpoint(eager=False)
 
     edges, viol = canonicalize_edges(linked, predicate_context(predicates))
     viol = viol.unionByName(validate_edges(edges, DOMAIN_RANGE))

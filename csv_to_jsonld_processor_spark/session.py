@@ -47,6 +47,9 @@ def get_spark(
     """Build (or reuse) a local SparkSession with scale-oriented defaults."""
     cpus = cpus or env_cpus()
     shuffle = shuffle_partitions or max(32, 2 * cpus)
+    # half the machine's RAM (MemTotal), at most 16g
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", f"{min(16384, ram_mb // 2)}m")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -59,7 +62,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

@@ -28,7 +28,7 @@ EDGES = [
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("bgp", cpus=8)
+    return get_spark("bgp")
 
 
 @pytest.fixture(scope="module")

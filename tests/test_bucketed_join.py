@@ -20,7 +20,7 @@ SF = "/root/testdata/sf0.001"
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("bucketed-join", cpus=8)
+    return get_spark("bucketed-join")
 
 
 def test_bucketed_join_needs_no_exchange(spark, tmp_path):

@@ -28,7 +28,7 @@ GRAPH = [
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("canonical", cpus=8)
+    return get_spark("canonical")
 
 
 def _df(spark, rows):

@@ -30,7 +30,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("cdc-test", cpus=8)
+    return get_spark("cdc-test")
 
 
 def _cdc_py(text: str) -> list[str]:

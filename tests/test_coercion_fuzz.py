@@ -112,7 +112,7 @@ def test_sql_twins_equal_column_builders(kind):
     )
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    spark = get_spark("coercion-sql-twins", cpus=8)
+    spark = get_spark("coercion-sql-twins")
     corpus = EDGE_CASES + _rand_strings(3000, seed=20260817)
     df = spark.createDataFrame([(s,) for s in corpus], "v string")
 

@@ -17,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.01"
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("dedup", cpus=8)
+    return get_spark("dedup")
 
 
 def test_simhash_pairs_exact_vs_allpairs(spark):

@@ -23,7 +23,7 @@ BOILER_DOCS = 120
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("dedup-stress", cpus=8)
+    return get_spark("dedup-stress")
 
 
 def test_star_cc_equals_min_label_and_cuts_rounds(spark):

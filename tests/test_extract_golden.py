@@ -44,7 +44,7 @@ def test_distributed_extraction_matches_pure_function():
     from csv_to_jsonld_processor_spark.session import get_spark
     from csv_to_jsonld_processor_spark.sources.pages import generate_pages
 
-    spark = get_spark("extract-golden", cpus=8)
+    spark = get_spark("extract-golden")
     pages = generate_pages(spark, 120, seed=42, partitions=6)
     got = {r["url"]: r["extracted_text"] for r in extract_pages(pages).collect()}
     assert len(got) == 120

@@ -33,7 +33,7 @@ def canon(t):
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("fixture-parity", cpus=8)
+    return get_spark("fixture-parity")
 
 
 @pytest.fixture(scope="module")

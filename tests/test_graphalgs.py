@@ -27,7 +27,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("graphalgs", cpus=8)
+    return get_spark("graphalgs")
 
 
 @pytest.fixture(scope="module")

@@ -9,7 +9,7 @@ import pytest
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("jsonldio", cpus=8)
+    return get_spark("jsonldio")
 
 
 def test_reader_explodes_typed_values(spark):

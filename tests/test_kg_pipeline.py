@@ -17,7 +17,7 @@ N_PAGES = 400
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("kg-pipeline", cpus=8)
+    return get_spark("kg-pipeline")
 
 
 @pytest.fixture(scope="module")
@@ -87,17 +87,56 @@ def test_build_kg_rejects_pages_without_html(spark, pages):
 def test_materialize_and_violations(spark, pages, tmp_path):
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
-    out = str(tmp_path / "kg")
-    res = build_kg(spark, pages, out_dir=out)
-    counts = res["counts"]
-    assert counts["edges"] > 0
-    assert counts["entities"] > 0
-    assert counts["predicates"] > 0
-    # bucketed layout on disk
-    assert any(d.startswith("bucket=") for d in os.listdir(f"{out}/edges"))
-    # entity IRIs are namespaced class/kebab-name
-    e = spark.read.parquet(f"{out}/entities").collect()
-    assert all(r.iri.startswith("http://example.org/kg/ids/") for r in e)
+    for strategy in ("fused_broadcast", "broadcast"):
+        out = str(tmp_path / strategy)
+        counts = build_kg(spark, pages, out_dir=out, link_strategy=strategy)["counts"]
+        assert counts["edges"] > 0
+        assert counts["entities"] > 0
+        assert counts["predicates"] > 0
+        # bucketed layout on disk
+        assert any(d.startswith("bucket=") for d in os.listdir(f"{out}/edges"))
+        # entity IRIs are namespaced class/kebab-name
+        e = spark.read.parquet(f"{out}/entities").collect()
+        assert all(r.iri.startswith("http://example.org/kg/ids/") for r in e)
+        # the counts are observed during the writes: they match the tables on disk
+        on_disk = {name: spark.read.parquet(f"{out}/{name}").count() for name in counts}
+        assert counts == on_disk, strategy
+
+
+@pytest.mark.parametrize("strategy", ["fused_broadcast", "broadcast"])
+def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path, strategy):
+    """With out_dir every sink (edges, entities, predicates, the four
+    violation branches) reads one computed linked relation: each page
+    row crosses into the Python stage exactly once."""
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    log = str(tmp_path / "tap.log")
+
+    def tap(batches):
+        for batch in batches:
+            with open(log, "a") as f:
+                f.write(f"{len(batch)}\n")
+            yield batch
+
+    tapped = pages.mapInPandas(tap, schema=pages.schema)
+    build_kg(spark, tapped, out_dir=str(tmp_path / "kg"), link_strategy=strategy)
+    with open(log) as f:
+        crossed = sum(int(line) for line in f)
+    assert crossed == pages.count()
+
+
+@pytest.mark.parametrize("empty", ["limit_0", "no_en_page"])
+def test_build_kg_out_dir_empty_input(spark, pages, tmp_path, empty):
+    """Zero input rows (or zero English pages) write empty tables and
+    report zero counts instead of failing to read back a partitioned
+    table that has no files."""
+    from pyspark.sql import functions as F
+
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    src = pages.limit(0) if empty == "limit_0" else pages.where(F.col("lang") != "en")
+    counts = build_kg(spark, src, out_dir=str(tmp_path / "kg"))["counts"]
+    assert counts == {"edges": 0, "entities": 0, "predicates": 0, "violations": 0}
 
 
 def test_resume_ledger_identical_output(spark, pages, tmp_path):

@@ -29,7 +29,7 @@ GOLDEN_EDGES = os.path.join(os.path.dirname(__file__), "golden", "kg_webtext_edg
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("kg-reasoning", cpus=8)
+    return get_spark("kg-reasoning")
 
 
 def _py_closure(pairs):

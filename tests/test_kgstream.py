@@ -10,7 +10,7 @@ import pytest
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    s = get_spark("kgstream", cpus=8)
+    s = get_spark("kgstream")
     from csv_to_jsonld_processor_spark.sources.pydatasource import register
 
     register(s)

@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("layout", cpus=8)
+    return get_spark("layout")
 
 
 @pytest.fixture(scope="module")

@@ -19,7 +19,7 @@ GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "kg_webtext_edges.csv
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("mlprep", cpus=8)
+    return get_spark("mlprep")
 
 
 @pytest.fixture(scope="module")

@@ -13,7 +13,7 @@ from csv_to_jsonld_processor_spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("multimodal", cpus=8)
+    return get_spark("multimodal")
 
 
 def test_decode_roundtrip_and_features(spark, tmp_path):

@@ -18,7 +18,7 @@ FIXTURES = "/root/reference/test-data"
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("pipeline-cli", cpus=8)
+    return get_spark("pipeline-cli")
 
 
 @pytest.fixture(scope="module")

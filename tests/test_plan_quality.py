@@ -17,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("plan-quality", cpus=8)
+    return get_spark("plan-quality")
 
 
 def plan_of(df, execute: bool = False) -> str:

@@ -13,7 +13,7 @@ from csv_to_jsonld_processor_spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark("pydatasource", cpus=8)
+    s = get_spark("pydatasource")
     from csv_to_jsonld_processor_spark.sources.pydatasource import register
 
     register(s)

@@ -103,7 +103,7 @@ def test_escape_literal_minimal():
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("rdfio", cpus=8)
+    return get_spark("rdfio")
 
 
 def test_distributed_roundtrip(spark):

@@ -9,7 +9,7 @@ from csv_to_jsonld_processor_spark.kg.bgp import Var
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("rules", cpus=8)
+    return get_spark("rules")
 
 
 def _graph(spark, triples):

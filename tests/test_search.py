@@ -19,7 +19,7 @@ SF = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("search-ops", cpus=8)
+    return get_spark("search-ops")
 
 
 @pytest.fixture(scope="module")

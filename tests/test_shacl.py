@@ -7,7 +7,7 @@ import pytest
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("shacl", cpus=8)
+    return get_spark("shacl")
 
 
 def test_shacl_suite_semantics(spark):

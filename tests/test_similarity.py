@@ -16,7 +16,7 @@ SF_DIR = "/root/testdata/sf0.01"
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("similarity", cpus=8)
+    return get_spark("similarity")
 
 
 def test_lsh_recall_of_top1(spark):

@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("sketches", cpus=8)
+    return get_spark("sketches")
 
 
 def test_hll_within_tolerance_every_group(spark):

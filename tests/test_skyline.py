@@ -13,7 +13,7 @@ from csv_to_jsonld_processor_spark.session import get_spark, load_tables
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("skyline", cpus=8)
+    return get_spark("skyline")
 
 
 def test_skyline_matches_brute_force_dominance(spark):

@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("snapshots", cpus=8)
+    return get_spark("snapshots")
 
 
 def test_commit_read_time_travel_upsert(spark, tmp_path):

@@ -24,7 +24,7 @@ from test_synthetic_manifest import COLORS_CSV, GADGETS_CSV, MANIFEST, MODEL_CSV
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("storage", cpus=8)
+    return get_spark("storage")
 
 
 def test_join_path_and_parent_uri_aware():
@@ -87,7 +87,7 @@ def test_file_uri_xlsx_reads_through_storage(tmp_path):
     from csv_to_jsonld_processor_spark.session import get_spark
     from csv_to_jsonld_processor_spark.sources.excel import read_sheet
 
-    get_spark("storage", cpus=8)  # ensure an active session for the JVM read
+    get_spark("storage")  # ensure an active session for the JVM read
     p = tmp_path / "wb.xlsx"
     _write_xlsx(p)
     local = read_sheet(str(p), "Things")

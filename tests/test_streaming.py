@@ -17,7 +17,7 @@ EVENTS_SCHEMA = (
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("streaming", cpus=8)
+    return get_spark("streaming")
 
 
 @pytest.fixture(scope="module")

@@ -91,7 +91,7 @@ def corpus(tmp_path_factory):
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("synth-manifest", cpus=8)
+    return get_spark("synth-manifest")
 
 
 def test_picklist_first_ordering():

@@ -15,7 +15,7 @@ from csv_to_jsonld_processor_spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark("tablechanges", cpus=8)
+    s = get_spark("tablechanges")
     from csv_to_jsonld_processor_spark.sources.tablechanges import register
 
     register(s)

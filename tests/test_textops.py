@@ -15,7 +15,7 @@ SF = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("textops", cpus=8)
+    return get_spark("textops")
 
 
 def test_bigram_lm_prefers_in_domain_text(spark):

@@ -26,7 +26,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("triplestore", cpus=8)
+    return get_spark("triplestore")
 
 
 def _golden_rows():

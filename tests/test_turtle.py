@@ -112,7 +112,7 @@ def test_integer_terminator_without_space():
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("turtle", cpus=8)
+    return get_spark("turtle")
 
 
 def test_distributed_two_pass_roundtrip(spark):

@@ -24,7 +24,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("urlops", cpus=8)
+    return get_spark("urlops")
 
 
 # (raw, expected canonical) — one vector per normalization rule

@@ -22,7 +22,7 @@ TS = datetime(2023, 11, 14, 22, 13, 20, tzinfo=timezone.utc)
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("warc", cpus=8)
+    return get_spark("warc")
 
 
 def test_record_roundtrip_plain_and_gzip():
