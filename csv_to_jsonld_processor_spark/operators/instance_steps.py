@@ -48,6 +48,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..sources import storage
 from ..coercion import (
@@ -352,7 +353,9 @@ def csv_headers(spark: SparkSession, path: str) -> list[str]:
 def read_csv_positional(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
     """RFC-4180 scan; columns renamed c0..cn so header strings with
     dots/parens never fight Spark's column resolution. Returns the raw
-    header list alongside."""
+    header list alongside. The schema comes from the header the driver
+    already parsed, so Spark launches no header-inference job; with
+    ``header`` set it still skips that line."""
     headers = csv_headers(spark, path)
     df = (
         spark.read.option("header", True)
@@ -360,10 +363,22 @@ def read_csv_positional(spark: SparkSession, path: str) -> tuple[DataFrame, list
         .option("escape", '"')
         .option("multiLine", True)
         .option("mode", "PERMISSIVE")
+        .schema(StructType([StructField(n, StringType()) for n in _inferred_names(headers)]))
         .csv(path)
     )
-    df = df.toDF(*[f"c{i}" for i in range(len(df.columns))])
+    df = df.toDF(*[f"c{i}" for i in range(len(headers))])
     return df, headers
+
+
+def _inferred_names(headers: list[str]) -> list[str]:
+    """The column names Spark's header inference gives (empty → ``_c<i>``,
+    case-insensitive duplicates → name + index). Naming the schema after
+    the header keeps the reader's header check from warning on every scan."""
+    low = [h.lower() for h in headers]
+    return [
+        f"_c{i}" if not h else f"{h}{i}" if low.count(h.lower()) > 1 else h
+        for i, h in enumerate(headers)
+    ]
 
 
 def read_step_positional(

@@ -11,6 +11,12 @@ Two instance sink shapes:
   allowed under a row-count guard.
 - NDJSON-framed JSON-LD nodes, written distributed and partitioned by a
   subject hash bucket — the 100 TB shape.
+
+One run computes the triples, the violations and the JSON-LD nodes once
+each: all three are lazy local checkpoints, filled by the first action
+that needs them and read by every later one. The violation count is
+observed during the violations write. The single document is sorted on
+the driver, so no range-partition sampling job runs.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ import json
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..manifest import Manifest
@@ -66,21 +72,27 @@ def assemble_entities_json(triples: DataFrame) -> DataFrame:
     import pandas as pd
 
     def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        out = []
-        for subj, g in pdf.groupby("subj"):
+        # one plain-Python pass: subj → pred → distinct values
+        ents: dict[str, dict[str, set]] = {}
+        for subj, pred, obj, kind in zip(pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_kind"]):
+            if subj is None:  # a null subject forms no node
+                continue
+            preds = ents.setdefault(subj, {})
+            if pred is not None:
+                val = obj if pred == "@type" else (str(obj), str(kind))
+                preds.setdefault(pred, set()).add(val)
+        subjs = sorted(ents)
+        nodes = []
+        for subj in subjs:
             node: dict = {"@id": subj}
-            types = sorted(g.loc[g["pred"] == "@type", "obj"].unique())
-            if types:
-                node["@type"] = types
-            rest = g[g["pred"] != "@type"]
-            for pred, pg in rest.groupby("pred"):
-                vals = sorted(
-                    {( str(o), str(k)) for o, k in zip(pg["obj"], pg["obj_kind"])}
-                )
-                typed = [_typed(o, k) for o, k in vals]
+            for pred, vals in ents[subj].items():
+                if pred == "@type":
+                    node["@type"] = sorted(vals)
+                    continue
+                typed = [_typed(o, k) for o, k in sorted(vals)]
                 node[pred] = typed if len(typed) > 1 else typed[0]
-            out.append({"subj": subj, "node": json.dumps(node, sort_keys=True)})
-        return pd.DataFrame(out, columns=["subj", "node"])
+            nodes.append(json.dumps(node, sort_keys=True))
+        return pd.DataFrame({"subj": subjs, "node": nodes})
 
     def gen(batches):
         carry = None
@@ -171,13 +183,17 @@ class Pipeline:
         triples, violations = build_instance_outputs(
             spark, self.manifest, vocab, self.base_path, self.strict
         )
+        triples = triples.localCheckpoint(eager=False)
+        violations = violations.localCheckpoint(eager=False)
 
         # A7: violations are a first-class output — always materialized;
         # strict mode fails the run on any error-severity row, mirroring
         # the reference's ProcessingState error escalation (error/mod.rs)
-        violations.write.mode("overwrite").parquet(
+        vio_obs = Observation()
+        violations.observe(vio_obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
             str(storage.join_path(out_dir, "violations.parquet"))
         )
+        n_violations = vio_obs.get["n"]
         vio_rows = violations.limit(10_000).collect()
         warnings = [
             f"[{r.rule}] stage={r.stage} subj={r.subj} pred={r.pred}: {r.value}"
@@ -190,9 +206,9 @@ class Pipeline:
             if r.severity == "error"
         ]
         if self.strict and vio_errors:
-            return PipelineOutcome(vio_errors, warnings, {"violations": len(vio_rows)})
+            return PipelineOutcome(vio_errors, warnings, {"violations": n_violations})
 
-        nodes = assemble_entities_json(triples)
+        nodes = assemble_entities_json(triples).localCheckpoint(eager=False)
 
         context = build_jsonld_context(
             vocab, self.manifest.model.base_iri, self.manifest.instances.base_iri
@@ -200,7 +216,7 @@ class Pipeline:
 
         n_entities = nodes.count()
         if single_document and n_entities <= SINGLE_DOC_MAX_ENTITIES:
-            insert = [json.loads(r.node) for r in nodes.orderBy("subj").collect()]
+            insert = [json.loads(r.node) for r in sorted(nodes.collect(), key=lambda r: r.subj)]
             doc = {"ledger": self.manifest.ledger, "@context": context, "insert": insert}
             storage.write_text(
                 storage.join_path(out_dir, "instances.jsonld"),
@@ -230,7 +246,7 @@ class Pipeline:
         return PipelineOutcome(
             [],
             warnings,
-            {"entities": n_entities, "triples": triples.count(), "violations": len(vio_rows)},
+            {"entities": n_entities, "triples": triples.count(), "violations": n_violations},
         )
 
     def _write_vocabulary(self, vocab: VocabularyMap, out_dir: str | Path) -> None:

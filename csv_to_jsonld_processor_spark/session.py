@@ -34,8 +34,9 @@ TABLES = (
 )
 
 
-def env_cpus(default: int = 32) -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", str(default)))
+def env_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def get_spark(

@@ -78,3 +78,42 @@ def test_writer_reader_roundtrip_multiset(spark):
     # the typed round-trip really normalized the lexical form
     assert ("s1", "price", "float", None, "300.0") in got
     assert ("s1", "price", "int", None, "12") in got
+
+
+def test_assemble_entities_json_bytes(spark):
+    """The exact node strings, with Arrow batches of the default size and
+    of two rows, so an entity spans batches and is carried over."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import assemble_entities_json
+
+    rows = [
+        ("s1", "@type", "Widget", "type"),
+        ("s1", "@type", "Gadget", "type"),
+        ("s1", "price", "300.00", "number"),
+        ("s1", "price", "12", "number"),
+        ("s1", "desc", 'say "hi", then\nbye', "string"),
+        ("s1", "desc", 'say "hi", then\nbye', "string"),  # duplicate row
+        ("s1", "ok", "true", "boolean"),
+        ("s1", "tag", "c", "string"),
+        ("s1", "tag", "a", "string"),
+        ("s1", "tag", "b", "string"),
+        ("s1", "ref", "s2", "ref"),
+        ("s2", "@type", "Widget", "type"),
+        ("s2", "ok", "false", "boolean"),
+        ("s2", "n", "7", "number"),
+    ]
+    want = [
+        ("s1", '{"@id": "s1", "@type": ["Gadget", "Widget"], '
+               '"desc": "say \\"hi\\", then\\nbye", "ok": true, "price": [12, 300.0], '
+               '"ref": "s2", "tag": ["a", "b", "c"]}'),
+        ("s2", '{"@id": "s2", "@type": ["Widget"], "n": 7, "ok": false}'),
+    ]
+    triples = spark.createDataFrame(rows, "subj string, pred string, obj string, obj_kind string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    try:
+        for batch in (default, "2"):
+            spark.conf.set(key, batch)
+            got = sorted(tuple(r) for r in assemble_entities_json(triples).collect())
+            assert got == want, batch
+    finally:
+        spark.conf.set(key, default)

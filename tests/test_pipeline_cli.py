@@ -114,6 +114,31 @@ def test_csv_scan_accepts_uri_paths(tmp_path):
     assert [tuple(r) for r in df.collect()] == [("T1", "Widget")]
 
 
+def test_csv_scan_duplicate_and_empty_headers(tmp_path):
+    """Repeated (case-insensitively) and empty header cells still give
+    one positional column each, with the raw header list alongside; the
+    driver-parsed header is the schema, so planning the scan runs no job."""
+    from csv_to_jsonld_processor_spark.operators.instance_steps import read_csv_positional
+    from csv_to_jsonld_processor_spark.session import get_spark
+
+    p = tmp_path / "t.csv"
+    p.write_text('Name,name,,Note\nA,B,C,"x, ""y""\nz"\nD\n')
+    spark = get_spark("dup-headers")
+    sc = spark.sparkContext
+    sc.setJobGroup("read-csv-positional", "read-csv-positional")
+    try:
+        df, headers = read_csv_positional(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("read-csv-positional")) == []
+    assert headers == ["Name", "name", "", "Note"]
+    assert df.columns == ["c0", "c1", "c2", "c3"]
+    assert [tuple(r) for r in df.collect()] == [
+        ("A", "B", "C", 'x, "y"\nz'),
+        ("D", None, None, None),
+    ]
+
+
 def test_cli_vocab_meta_flag(tmp_path, fixed_manifest):
     """--vocab-meta round trip through the CLI: a second run driven by
     the first run's exported metadata produces identical instances."""

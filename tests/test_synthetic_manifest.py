@@ -4,7 +4,9 @@ namespaceIris, rdfs:label injection (R7), picklist one_of accumulation
 (A4) — on a small synthetic corpus with a hand-computed expected triple
 set."""
 
+import json
 import os
+import shutil
 import sys
 
 import pytest
@@ -238,3 +240,78 @@ def test_vocab_meta_reload_identical(spark, corpus, tmp_path):
     assert r2.ok
     for name in ("instances.jsonld", "vocabulary.jsonld", "vocab_meta.json"):
         assert (out1 / name).read_text() == (out2 / name).read_text(), name
+
+
+def _run_counting_jobs(spark, corpus, out, single_document):
+    """Pipeline.run under its own job group → (outcome, Spark jobs launched)."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    group = f"pipeline-run:{out}"
+    sc.setJobGroup(group, group)
+    try:
+        outcome = Pipeline(Manifest.from_dict(MANIFEST), corpus).run(
+            spark, out, single_document=single_document
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return outcome, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def both_modes(spark, corpus, tmp_path_factory):
+    """mode → (out dir, outcome, jobs) for the single-document and NDJSON sinks."""
+    d = tmp_path_factory.mktemp("modes")
+    return {
+        mode: (d / mode, *_run_counting_jobs(spark, corpus, d / mode, mode == "document"))
+        for mode in ("document", "ndjson")
+    }
+
+
+def test_ndjson_mode_matches_single_document(both_modes):
+    """The NDJSON parts hold the single document's nodes (as a multiset),
+    context.jsonld its @context, and both runs report the same counts."""
+    doc_dir, doc_out, _ = both_modes["document"]
+    nd_dir, nd_out, _ = both_modes["ndjson"]
+    assert doc_out.ok and nd_out.ok
+    doc = json.loads((doc_dir / "instances.jsonld").read_text())
+    lines = [
+        line
+        for part in sorted(nd_dir.glob("instances_ndjson/bucket=*/part-*"))
+        for line in part.read_text().splitlines()
+    ]
+
+    def canon(nodes):
+        return sorted(json.dumps(n, sort_keys=True) for n in nodes)
+
+    assert len(doc["insert"]) == doc_out.counts["entities"] == 5
+    assert canon(json.loads(line) for line in lines) == canon(doc["insert"])
+    assert json.loads((nd_dir / "context.jsonld").read_text())["@context"] == doc["@context"]
+    assert nd_out.counts == doc_out.counts
+
+
+def test_pipeline_run_job_ceiling(both_modes):
+    """Triples, violations and nodes are each computed once per run: a
+    recompute of any of them brings the job count over the ceiling."""
+    jobs = {mode: n for mode, (_, _, n) in both_modes.items()}
+    assert all(n <= 12 for n in jobs.values()), jobs
+
+
+def test_violation_count_is_exact_past_10k(spark, corpus, tmp_path):
+    """counts["violations"] is every violation written, not the first
+    10,000 the warning and error messages are capped at."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    d = tmp_path / "big"
+    shutil.copytree(corpus, d)
+    header = GADGETS_CSV.splitlines()[0]
+    rows = "".join(f"B{i},Name{i},red,,1,x{i},m\n" for i in range(10_050))
+    (d / "instances" / "Gadgets.csv").write_text(f"{header}\n{rows}")
+
+    for strict in (False, True):
+        out = tmp_path / f"out-{strict}"
+        outcome = Pipeline(Manifest.from_dict(MANIFEST), d, strict=strict).run(spark, out)
+        written = spark.read.parquet(str(out / "violations.parquet")).count()
+        assert written > 10_000
+        assert outcome.counts["violations"] == written, strict
+        assert len(outcome.errors if strict else outcome.warnings) == 10_000
