@@ -161,6 +161,73 @@ def test_oracle_agrees_on_synthetic(spark, corpus):
     )
 
 
+PIVOT_MODEL_CSV = """Class Name,Class Description,Property Name,Property Description,Type,Class Range,
+Item,A catalog item,Item ID,id,@id,,
+Item,A catalog item,Item Name,name,string,,
+Order,An order,Order ID,id,@id,,
+Order,An order,Customer,buyer,string,,
+Order,An order,has Lines,order lines,URI,OrderLine,
+OrderLine,One order line,Qty,quantity,Integer,,
+OrderLine,One order line,Unit Price,price,Float,,
+OrderLine,One order line,has Item,item ref,URI,Item,
+"""
+
+# O1 repeats with two lines; O2's pivot cells are all empty (no child, no
+# hasLines); O3's Qty and Unit Price fail coercion and stay string-kind
+ORDERS_CSV = """Order ID,Customer,Qty,has Item,Unit Price
+O1,Alice,2,I1,"$1,234.50"
+O1,Alice,3,I2,10
+O2,Bob,,,
+O3,Carol,x,I1,bad
+"""
+
+
+@pytest.mark.parametrize("namespaced", [True, False], ids=["namespaced", "plain"])
+def test_pivot_children_match_oracle(spark, tmp_path, namespaced):
+    """R1: each row with any pivot value spawns one content-hashed child
+    linked from its parent; engine triples equal the oracle's."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+    from oracle_reference import oracle_triples
+
+    (tmp_path / "model").mkdir()
+    (tmp_path / "instances").mkdir()
+    (tmp_path / "model" / "Model.csv").write_text(PIVOT_MODEL_CSV)
+    (tmp_path / "instances" / "Orders.csv").write_text(ORDERS_CSV)
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["namespaceIris"] = namespaced
+    manifest["instances"]["sequence"] = [
+        {
+            "path": "Orders.csv",
+            "@type": ["CSVImportStep", "BasicInstanceStep"],
+            "instanceType": "Order",
+            "pivotColumns": [
+                {
+                    "instanceType": "OrderLine",
+                    "newRelationshipProperty": "hasLines",
+                    "columns": ["Qty", "has Item", "Unit Price"],
+                }
+            ],
+        }
+    ]
+    m = Manifest.from_dict(manifest)
+    vocab = compile_vocabulary(m, str(tmp_path))
+    engine = {
+        tuple(r) for r in build_instance_outputs(spark, m, vocab, str(tmp_path))[0].collect()
+    }
+    oracle = oracle_triples(m, vocab, str(tmp_path))
+    assert engine == oracle, (
+        f"engine-only={sorted(engine - oracle)[:6]} oracle-only={sorted(oracle - engine)[:6]}"
+    )
+    children = {s for s, p, o, k in engine if p == "@type" and o == "OrderLine"}
+    assert len(children) == 3
+    assert {o for s, p, o, k in engine if p == "hasLines"} == children
+    o2 = "order/O2" if namespaced else "O2"
+    assert not any(s == o2 and p == "hasLines" for s, p, o, k in engine)
+    assert any(p == "Unit Price" and k == "number" and float(o) == 1234.5 for s, p, o, k in engine)
+    assert any(p == "Qty" and o == "x" and k == "string" for s, p, o, k in engine)
+    assert any(p == "Unit Price" and o == "bad" and k == "string" for s, p, o, k in engine)
+
+
 def test_violations_lenient(spark, corpus):
     """A7 + J4: unknown header, failed Integer coercion, and picklist
     membership failures route to the violations DataFrame; Decimal
