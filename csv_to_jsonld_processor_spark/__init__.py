@@ -9,7 +9,7 @@ Layout
 ------
 - ``session``     — tuned SparkSession builders (AQE, Arrow, shuffle sizing)
 - ``iri``         — exact-parity string/IRI functions (SURVEY §2.6 F1–F5, F10–F11)
-- ``coercion``    — typed value coercion as Column expressions (F6–F9)
+- ``coercion``    — typed value coercion as SQL expressions (F6–F9)
 - ``manifest``    — declarative pipeline plan (JSONC manifest, SURVEY §1.1)
 - ``vocabulary``  — driver-side vocabulary/@context compiler (broadcast artifact)
 - ``operators/``  — instance steps, triple merge, dedup, similarity, text stats

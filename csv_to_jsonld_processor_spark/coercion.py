@@ -1,7 +1,9 @@
-"""Typed value coercion as Spark Column expressions (SURVEY §2.6 F6–F9).
+"""Typed value coercion as Spark SQL expressions (SURVEY §2.6 F6–F9).
 
-Everything here is JVM-side (whole-stage codegen, no Python in the hot
-path). Semantics mirror the reference's per-cell coercions
+Each builder renders one coercion as SQL text over a column expression,
+so a whole header becomes a single ``F.expr`` call: one py4j round trip
+at plan time, and JVM-side (whole-stage codegen, no Python) at run
+time. Semantics mirror the reference's per-cell coercions
 (``csv-to-jsonld-lib/src/instance/value_processor.rs:8-150``,
 ``utils/mod.rs:5-21``), including the fallback-to-raw behaviors:
 
@@ -21,9 +23,6 @@ path). Semantics mirror the reference's per-cell coercions
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 INT_RE = r"^[+-]?[0-9]+$"
 # Rust f64::from_str grammar, minus inf/nan (documented deviation: the
 # fixture domain has no infinities; Spark's cast would need special cases)
@@ -39,109 +38,6 @@ _DATE_PATTERNS = [
 ]
 
 
-def _year_sane(d: Column) -> Column:
-    """Clamp format-parsed dates to 4-digit unsigned years. Java's yyyy
-    (SignStyle.EXCEEDS_PAD) sneaks in '-262144' / '+12345' style years
-    where chrono's %Y accepts any signed in-range integer — the two
-    parsers are irreconcilable beyond 4 digits, so the engine AND the
-    oracle pin the same documented contract: dash/slash/month-name
-    formats carry years 0000-9999 only (the %Y year-only branch keeps
-    chrono's full ±262143)."""
-    return F.when((F.year(d) >= 0) & (F.year(d) <= 9999), d)
-
-
-def parse_date(c: Column) -> Column:
-    """15-format date cascade → DateType or null (utils/mod.rs:5-21,
-    value_processor.rs:17-61). Ordering mirrors the reference's
-    first-match-wins loop."""
-    c = F.trim(c)
-    attempts = [_year_sane(F.try_to_date(c, p)) for p in _DATE_PATTERNS]
-    attempts.append(
-        _year_sane(F.try_to_date(F.try_to_timestamp(c, F.lit("yyyy-M-d H:m:s"))))
-    )
-    attempts.append(_year_sane(F.try_to_date(c, "MMM d, yyyy")))
-    attempts.append(_year_sane(F.try_to_date(c, "MMMM d, yyyy")))
-    # "%Y" special: whole-string integer → Jan 1 (value_processor.rs:30-37).
-    # Bounded to chrono's NaiveDate year range (±262143): java.time would
-    # happily build year 2_000_000 where the reference's from_ymd_opt
-    # returns None and falls through to the raw value.
-    yr = c.cast("int")
-    attempts.append(
-        F.when(
-            c.rlike(INT_RE) & (F.abs(yr) <= 262143),
-            F.try_to_date(F.concat(yr, F.lit("-1-1")), "y-M-d"),
-        )
-    )
-    # year-month fallbacks (value_processor.rs:39-58): "2024-06"/"2024/06" →
-    # "<v>-01"; "Jun 2024"/"June 2024" → "01 <v>"
-    swapped = F.concat(F.replace(c, F.lit("/"), F.lit("-")), F.lit("-01"))
-    attempts.append(_year_sane(F.try_to_date(swapped, "yyyy-M-d")))
-    attempts.append(_year_sane(F.try_to_date(F.concat(F.lit("01 "), c), "d MMMM yyyy")))
-    attempts.append(_year_sane(F.try_to_date(F.concat(F.lit("01 "), c), "d MMM yyyy")))
-    return F.coalesce(*attempts)
-
-
-def coerce_date(c: Column) -> Column:
-    """F6 → 'yyyy-MM-dd' string, raw passthrough when unparseable."""
-    d = parse_date(c)
-    return F.when(d.isNotNull(), F.date_format(d, "yyyy-MM-dd")).otherwise(c)
-
-
-def _cleaned(c: Column) -> Column:
-    return F.regexp_replace(c, r"[$%,]", "")
-
-
-def coerce_integer(c: Column) -> Column:
-    """F7 → canonical integer string, raw passthrough otherwise."""
-    cl = _cleaned(c)
-    return F.when(cl.rlike(INT_RE), cl.cast("long").cast("string")).otherwise(c)
-
-
-def coerce_decimal(c: Column) -> Column:
-    """F8 → double string; else the *cleaned* string (reference quirk)."""
-    cl = _cleaned(c)
-    return F.when(cl.rlike(FLOAT_RE), cl.cast("double").cast("string")).otherwise(cl)
-
-
-def coerce_boolean(c: Column) -> Column:
-    """F9 → 'true'/'false', raw passthrough otherwise."""
-    low = F.lower(c)
-    truthy = low.isin("true", "1", "yes")
-    falsy = low.isin("false", "0", "no")
-    return F.when(truthy, F.lit("true")).when(falsy, F.lit("false")).otherwise(c)
-
-
-def coercion_kind_flags(kind: str, c: Column) -> Column:
-    """The emitted JSON kind for a coerced value: number/boolean/string."""
-    cl = _cleaned(c)
-    if kind == "Integer":
-        return F.when(cl.rlike(INT_RE), F.lit("number")).otherwise(F.lit("string"))
-    if kind == "Decimal":
-        return F.when(cl.rlike(FLOAT_RE), F.lit("number")).otherwise(F.lit("string"))
-    if kind == "Boolean":
-        low = F.lower(c)
-        return F.when(
-            low.isin("true", "1", "yes", "false", "0", "no"), F.lit("boolean")
-        ).otherwise(F.lit("string"))
-    if kind in ("URI", "Picklist"):
-        return F.lit("ref")
-    return F.lit("string")
-
-
-# --------------------------------------------------------------------------
-# SQL-text twins of the Column builders above.
-#
-# Why both exist: the Column builders make ~100 py4j round-trips per Date
-# header (20 try_to_date attempts x several calls each), and a fixture
-# manifest has dozens of headers — plan CONSTRUCTION cost 3.7 s of the
-# 5.3 s fixture_triples wall time. Each *_sql twin renders the identical
-# expression as ONE string, so a whole header becomes a single F.expr
-# call. Semantics are pinned to the Column versions by
-# tests/test_coercion_fuzz.py::test_sql_twins_equal_column_builders over
-# the full fuzz corpus, and by the byte-golden fixture hash.
-# --------------------------------------------------------------------------
-
-
 def sql_str(s: str) -> str:
     """SQL single-quoted literal (backslash + quote escaped — matches
     Spark's default escapedStringLiterals=false parsing)."""
@@ -149,10 +45,20 @@ def sql_str(s: str) -> str:
 
 
 def _year_sane_sql(d: str) -> str:
+    """Clamp format-parsed dates to 4-digit unsigned years. Java's yyyy
+    (SignStyle.EXCEEDS_PAD) sneaks in '-262144' / '+12345' style years
+    where chrono's %Y accepts any signed in-range integer — the two
+    parsers are irreconcilable beyond 4 digits, so the engine AND the
+    oracle pin the same documented contract: dash/slash/month-name
+    formats carry years 0000-9999 only (the %Y year-only branch keeps
+    chrono's full ±262143)."""
     return f"IF(year({d}) >= 0 AND year({d}) <= 9999, {d}, NULL)"
 
 
 def parse_date_sql(c: str) -> str:
+    """15-format date cascade → DateType or null (utils/mod.rs:5-21,
+    value_processor.rs:17-61). Ordering mirrors the reference's
+    first-match-wins loop."""
     c = f"trim({c})"
     attempts = [_year_sane_sql(f"try_to_date({c}, '{p}')") for p in _DATE_PATTERNS]
     attempts.append(
@@ -160,11 +66,17 @@ def parse_date_sql(c: str) -> str:
     )
     attempts.append(_year_sane_sql(f"try_to_date({c}, 'MMM d, yyyy')"))
     attempts.append(_year_sane_sql(f"try_to_date({c}, 'MMMM d, yyyy')"))
+    # "%Y" special: whole-string integer → Jan 1 (value_processor.rs:30-37).
+    # Bounded to chrono's NaiveDate year range (±262143): java.time would
+    # happily build year 2_000_000 where the reference's from_ymd_opt
+    # returns None and falls through to the raw value.
     yr = f"CAST({c} AS INT)"
     attempts.append(
         f"IF({c} rlike '{INT_RE}' AND abs({yr}) <= 262143, "
         f"try_to_date(concat({yr}, '-1-1'), 'y-M-d'), NULL)"
     )
+    # year-month fallbacks (value_processor.rs:39-58): "2024-06"/"2024/06" →
+    # "<v>-01"; "Jun 2024"/"June 2024" → "01 <v>"
     attempts.append(
         _year_sane_sql(f"try_to_date(concat(replace({c}, '/', '-'), '-01'), 'yyyy-M-d')")
     )
@@ -174,6 +86,7 @@ def parse_date_sql(c: str) -> str:
 
 
 def coerce_date_sql(c: str) -> str:
+    """F6 → 'yyyy-MM-dd' string, raw passthrough when unparseable."""
     d = parse_date_sql(c)
     return f"nvl2({d}, date_format({d}, 'yyyy-MM-dd'), {c})"
 
@@ -183,16 +96,19 @@ def _cleaned_sql(c: str) -> str:
 
 
 def coerce_integer_sql(c: str) -> str:
+    """F7 → canonical integer string, raw passthrough otherwise."""
     cl = _cleaned_sql(c)
     return f"IF({cl} rlike '{INT_RE}', CAST(CAST({cl} AS BIGINT) AS STRING), {c})"
 
 
 def coerce_decimal_sql(c: str) -> str:
+    """F8 → double string; else the *cleaned* string (reference quirk)."""
     cl = _cleaned_sql(c)
     return f"IF({cl} rlike {sql_str(FLOAT_RE)}, CAST(CAST({cl} AS DOUBLE) AS STRING), {cl})"
 
 
 def coerce_boolean_sql(c: str) -> str:
+    """F9 → 'true'/'false', raw passthrough otherwise."""
     return (
         f"CASE WHEN lower({c}) IN ('true', '1', 'yes') THEN 'true' "
         f"WHEN lower({c}) IN ('false', '0', 'no') THEN 'false' ELSE {c} END"
@@ -200,6 +116,7 @@ def coerce_boolean_sql(c: str) -> str:
 
 
 def coercion_kind_flags_sql(kind: str, c: str) -> str:
+    """The emitted JSON kind for a coerced value: number/boolean/string."""
     cl = _cleaned_sql(c)
     if kind == "Integer":
         return f"IF({cl} rlike '{INT_RE}', 'number', 'string')"

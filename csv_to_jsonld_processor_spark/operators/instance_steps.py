@@ -9,7 +9,7 @@ column expressions over a CSV/parquet scan:
   compilation against the broadcast vocabulary (J1)
 - P6 empty-id/empty-value filters → ``filter`` + per-header ``when``
 - R4 multi-value split → ``transform(split(...), trim)``
-- F6–F9 coercions → JVM column expressions (coercion.py)
+- F6–F9 coercions → one SQL expression per header (coercion.py)
 - J5 class-restricted values → plan-time class resolution (the target
   class is a column-level constant)
 - R1 pivot columns → deterministic content-hash child ids (``sha2``)
@@ -52,17 +52,16 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ..sources import storage
 from ..coercion import (
-    coerce_boolean,
-    coerce_date,
-    coerce_decimal,
-    coerce_integer,
-    coercion_kind_flags,
+    coerce_boolean_sql,
+    coerce_date_sql,
+    coerce_decimal_sql,
+    coerce_integer_sql,
+    coercion_kind_flags_sql,
+    sql_str,
 )
 from ..iri import expand_iri_with_base, to_kebab_case
 from ..manifest import ImportStep, Manifest
 from ..vocabulary import VocabularyMap
-
-TRIPLE_COLS = ("subj", "pred", "obj", "obj_kind")
 
 _SEP = "\x1f"  # unit separator for deterministic child hashing
 
@@ -185,93 +184,11 @@ def plan_headers(
 # value expressions
 # --------------------------------------------------------------------------
 
-
-def _coerce_one(kind: str, target: str | None, c: Column, vocab: VocabularyMap,
-                model_base_iri: str, namespace_iris: bool) -> Column:
-    if kind == "Date":
-        return coerce_date(c)
-    if kind == "Integer":
-        return coerce_integer(c)
-    if kind == "Decimal":
-        return coerce_decimal(c)
-    if kind == "Boolean":
-        return coerce_boolean(c)
-    if kind in ("URI", "Picklist"):
-        # J5 (value_processor.rs:152-245): target class is a plan-time
-        # constant; only namespacing (off by default) changes the value.
-        # The prefix kebab-cases the raw class key's display string
-        # (value_processor.rs:236-238 uses class_id.to_string()).
-        if namespace_iris and target is not None:
-            raw = vocab.find_class_for_target(target, model_base_iri)
-            if raw is not None:
-                prefix = to_kebab_case(raw.display())
-                return F.concat(F.lit(prefix + "/"), c)
-        return c
-    return c  # String / ID
-
-
-def _values_expr(step: ImportStep, plan: HeaderPlan, c: Column,
-                 vocab: VocabularyMap, model_base_iri: str,
-                 namespace_iris: bool) -> Column:
-    """array<struct<obj:string, obj_kind:string>> for one header cell.
-
-    R4: non-String typed cells split on the step delimiter (default ';'),
-    each piece trimmed (processor_impl.rs:188-200). Each split+trimmed
-    element is coerced AND kind-typed independently — the reference types
-    per value, not per cell (value_processor.rs), so '1;2' under Integer
-    yields two number-kind values, and ' 42 ' is typed on the trimmed
-    form.
-    """
-    delim = step.delimit_values_on or ";"
-    if plan.kind == "String":
-        raw_vals = F.array(c)
-    else:
-        raw_vals = F.transform(F.split(c, re.escape(delim)), lambda x: F.trim(x))
-    return F.transform(
-        raw_vals,
-        lambda v: F.struct(
-            _coerce_one(plan.kind, plan.target, v, vocab, model_base_iri, namespace_iris).alias("obj"),
-            coercion_kind_flags(plan.kind, v).alias("obj_kind"),
-        ),
-    )
-
-
-_PAIRS_T = "array<struct<obj:string,obj_kind:string>>"
-
-
-def _triples_for_values(pred: str, pairs: Column) -> Column:
-    """array<struct<pred,obj,obj_kind>> — one entry per value."""
-    return F.transform(
-        pairs,
-        lambda s: F.struct(
-            F.lit(pred).alias("pred"), s.obj.alias("obj"), s.obj_kind.alias("obj_kind")
-        ),
-    )
-
-
-# --- SQL-text twins (plan-construction fast path) --------------------------
-#
-# The Column builders above cost ~100 py4j round-trips per Date header
-# (the 20-attempt parse cascade), and a fixture manifest has dozens of
-# headers; plan construction dominated fixture_triples wall time. These
-# twins render the IDENTICAL expression as one string so each header is
-# a single F.expr call. Semantics pinned by
-# tests/test_coercion_fuzz.py::test_sql_twins_equal_column_builders and
-# the byte-golden fixture hash (tests/golden/fixture_triples.csv).
-
 _TRIPLES_T = "array<struct<pred:string,obj:string,obj_kind:string>>"
 
 
 def _coerce_one_sql(kind: str, target: str | None, v: str, vocab: VocabularyMap,
                     model_base_iri: str, namespace_iris: bool) -> str:
-    from ..coercion import (
-        coerce_boolean_sql,
-        coerce_date_sql,
-        coerce_decimal_sql,
-        coerce_integer_sql,
-        sql_str,
-    )
-
     if kind == "Date":
         return coerce_date_sql(v)
     if kind == "Integer":
@@ -281,22 +198,32 @@ def _coerce_one_sql(kind: str, target: str | None, v: str, vocab: VocabularyMap,
     if kind == "Boolean":
         return coerce_boolean_sql(v)
     if kind in ("URI", "Picklist"):
+        # J5 (value_processor.rs:152-245): target class is a plan-time
+        # constant; only namespacing (off by default) changes the value.
+        # The prefix kebab-cases the raw class key's display string
+        # (value_processor.rs:236-238 uses class_id.to_string()).
         if namespace_iris and target is not None:
             raw = vocab.find_class_for_target(target, model_base_iri)
             if raw is not None:
                 prefix = to_kebab_case(raw.display())
                 return f"concat({sql_str(prefix + '/')}, {v})"
         return v
-    return v
+    return v  # String / ID
 
 
 def _values_expr_sql(step: ImportStep, plan: HeaderPlan, c: str,
                      vocab: VocabularyMap, model_base_iri: str,
                      namespace_iris: bool) -> str:
-    """SQL text of _values_expr for column expression ``c`` (lambda
-    variable ``v`` is reserved by this builder)."""
-    from ..coercion import coercion_kind_flags_sql, sql_str
+    """array<struct<obj:string, obj_kind:string>> for the header cell
+    ``c``, as SQL text (lambda variable ``v`` is reserved by this builder).
 
+    R4: non-String typed cells split on the step delimiter (default ';'),
+    each piece trimmed (processor_impl.rs:188-200). Each split+trimmed
+    element is coerced AND kind-typed independently — the reference types
+    per value, not per cell (value_processor.rs), so '1;2' under Integer
+    yields two number-kind values, and ' 42 ' is typed on the trimmed
+    form.
+    """
     delim = step.delimit_values_on or ";"
     if plan.kind == "String":
         raw = f"array({c})"
@@ -308,8 +235,7 @@ def _values_expr_sql(step: ImportStep, plan: HeaderPlan, c: str,
 
 
 def _triples_for_values_sql(pred: str, pairs: str) -> str:
-    from ..coercion import sql_str
-
+    """array<struct<pred,obj,obj_kind>> — one entry per value."""
     return (
         f"transform({pairs}, s -> named_struct('pred', {sql_str(pred)}, "
         "'obj', s.obj, 'obj_kind', s.obj_kind))"
@@ -337,17 +263,20 @@ def csv_headers(spark: SparkSession, path: str) -> list[str]:
     """First CSV record via the driver filesystem for plain paths, or
     through Spark's Hadoop FS for scheme-qualified URIs (s3a://,
     file://, hdfs://) — S3 storage (S5/S3) must not fall over on the
-    driver-side header peek."""
+    driver-side header peek. A file with no record raises ValueError."""
     import csv as _csv
     import io
-    import re as _re
 
-    if _re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path):
+    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path):
         first = spark.read.text(path).limit(1).collect()
         line = first[0][0] if first else ""
-        return next(_csv.reader(io.StringIO(line.lstrip("\ufeff"))))
-    with open(path, newline="", encoding="utf-8-sig") as f:
-        return next(_csv.reader(f))
+        header = next(_csv.reader(io.StringIO(line.lstrip("\ufeff"))), None)
+    else:
+        with open(path, newline="", encoding="utf-8-sig") as f:
+            header = next(_csv.reader(f), None)
+    if header is None:
+        raise ValueError(f"{path}: empty CSV, no header row")
+    return header
 
 
 def read_csv_positional(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
@@ -410,18 +339,6 @@ def _nonempty(c: Column) -> Column:
 # --------------------------------------------------------------------------
 # step → triples
 # --------------------------------------------------------------------------
-
-
-def basic_instance_triples(
-    spark: SparkSession,
-    manifest: Manifest,
-    vocab: VocabularyMap,
-    step: ImportStep,
-    base_path: str | Path,
-) -> DataFrame:
-    """BasicInstanceStep / PicklistStep triples only (see
-    basic_instance_outputs for the planning metadata variant)."""
-    return basic_instance_outputs(spark, manifest, vocab, step, base_path)[0]
 
 
 def basic_instance_outputs(
@@ -495,13 +412,10 @@ def basic_instance_outputs(
         group_plans = [p for p in plans if p is not None and p.pivot_group == gi]
         if not group_plans:
             continue
-        val_cols = {}
-        for p in group_plans:
-            pairs = _values_expr_sql(step, p, f"c{p.index}", vocab, model_base, namespace_iris)
-            val_cols[p.index] = F.expr(
-                f"IF(c{p.index} IS NOT NULL AND c{p.index} != '', {pairs}, "
-                f"CAST(array() AS {_PAIRS_T}))"
-            )
+        trips = [
+            _header_triples_expr(step, p, vocab, model_base, namespace_iris)
+            for p in group_plans
+        ]
         any_value = None
         for p in group_plans:
             cond = _nonempty(_col(p.index))
@@ -510,11 +424,9 @@ def basic_instance_outputs(
         # deterministic blank-node id: hash of parent, relationship, type and
         # the processed pivot values in column order (SURVEY §2.8 #1)
         hash_parts = [F.col("_subj"), F.lit(pc.new_relationship_property), F.lit(pc.instance_type)]
-        for p in group_plans:
+        for p, trip in zip(group_plans, trips):
             hash_parts.append(F.lit(p.name))
-            hash_parts.append(
-                F.concat_ws(_SEP, F.transform(val_cols[p.index], lambda s: s.obj))
-            )
+            hash_parts.append(F.concat_ws(_SEP, F.transform(trip, lambda s: s.obj)))
         child_id = F.sha2(F.concat_ws(_SEP, *hash_parts), 256)
 
         pdf = df.filter(any_value).withColumn("_child", child_id)
@@ -526,13 +438,7 @@ def basic_instance_outputs(
                     F.lit("type").alias("obj_kind"),
                 )
             )
-        ]
-        for p in group_plans:
-            arr = F.when(
-                _nonempty(_col(p.index)),
-                _triples_for_values(p.name, val_cols[p.index]),
-            ).otherwise(F.array().cast("array<struct<pred:string,obj:string,obj_kind:string>>"))
-            child_arrays.append(arr)
+        ] + trips
 
         child_triples = pdf.select(
             F.col("_child").alias("subj"),
@@ -623,7 +529,7 @@ def subclass_instance_triples(
                 F.array(
                     F.struct(F.lit(h).alias("pred"), _col(i).alias("obj"), F.lit("string").alias("obj_kind"))
                 ),
-            ).otherwise(F.array().cast("array<struct<pred:string,obj:string,obj_kind:string>>"))
+            ).otherwise(F.array().cast(_TRIPLES_T))
         )
 
     return df.select(
@@ -661,6 +567,9 @@ def properties_instance_triples(
         id_idx = headers.index("Entity ID")
     else:
         raise ValueError(f"No identifier column found in {path}")
+    for col in (prop_id_col, prop_val_col):
+        if col not in headers:
+            raise ValueError(f"Property column '{col}' not found in {path}")
     pid_idx = headers.index(prop_id_col)
     pval_idx = headers.index(prop_val_col)
 
@@ -701,31 +610,3 @@ def properties_instance_triples(
         F.lit("type").alias("obj_kind"),
     )
     return triples.unionByName(types)
-
-
-# --------------------------------------------------------------------------
-# pipeline: all instance steps → merged triple table (A1)
-# --------------------------------------------------------------------------
-
-
-def build_instance_triples(
-    spark: SparkSession,
-    manifest: Manifest,
-    vocab: VocabularyMap,
-    base_path: str | Path,
-) -> DataFrame:
-    """PHASE B (processor/mod.rs:211-251): picklist steps first, then the
-    rest in manifest order; union + dedup = the reference's merge-by-@id
-    with set-union arrays (A1), expressed as one shuffle."""
-    dfs: list[DataFrame] = []
-    for step in manifest.instance_sequence():
-        if step.has_type("SubClassInstanceStep"):
-            dfs.append(subclass_instance_triples(spark, manifest, vocab, step, base_path))
-        elif step.has_type("PropertiesInstanceStep"):
-            dfs.append(properties_instance_triples(spark, manifest, vocab, step, base_path))
-        else:
-            dfs.append(basic_instance_triples(spark, manifest, vocab, step, base_path))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out.dropDuplicates(["subj", "pred", "obj", "obj_kind"])

@@ -228,7 +228,9 @@ def build_instance_outputs(
 
     Picklist one_of accumulates first (picklist steps are ordered ahead
     of basic steps — processor/mod.rs:211-251 — so membership checks see
-    the full enum). Triples match build_instance_triples exactly; the
+    the full enum). The triples are the A1 merge of every instance step
+    (processor/mod.rs:211-251): union + dedup = the reference's
+    merge-by-@id with set-union arrays, expressed as one shuffle. The
     violations union is lazily evaluated like any other DataFrame.
 
     Subclass and EAV (properties) steps emit raw strings with no

@@ -58,13 +58,13 @@ def fixture_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     if memo is not None:
         return memo
 
-    from ..operators.instance_steps import build_instance_triples
+    from ..operators.violations import build_instance_outputs
     from ..vocabulary import compile_vocabulary
 
     m = _load_fixture_manifest()
     vocab = compile_vocabulary(m, FIXTURES)
     out = (
-        build_instance_triples(spark, m, vocab, FIXTURES)
+        build_instance_outputs(spark, m, vocab, FIXTURES)[0]
         .select("subj", "pred", "obj", "obj_kind")
         .orderBy("subj", "pred", "obj", "obj_kind")
         .localCheckpoint()

@@ -363,10 +363,7 @@ class VocabularyCompiler:
             from .sources.excel import read_sheet
 
             return read_sheet(path, step.sheet or step.step_id())
-        rdr = csv.reader(io.StringIO(storage.read_text(path)))
-        headers = next(rdr)
-        rows = list(rdr)
-        return headers, rows
+        return _read_csv_rows(path)
 
     def _process_step(self, step: ImportStep) -> None:
         kind = next(t for t in step.types if t.endswith("VocabularyStep"))
@@ -585,6 +582,16 @@ def is_model_file(headers: list[str]) -> bool:
     return all(h in headers for h in MODEL_SNIFF_HEADERS)
 
 
+def _read_csv_rows(path) -> tuple[list[str], list[list[str]]]:
+    """(header, data rows) of a driver-read CSV; ValueError when the file
+    holds no record at all."""
+    rdr = csv.reader(io.StringIO(storage.read_text(path)))
+    headers = next(rdr, None)
+    if headers is None:
+        raise ValueError(f"{path}: empty CSV, no header row")
+    return headers, list(rdr)
+
+
 def compile_vocabulary(manifest: Manifest, base_path: str | Path, strict: bool = False,
                        sniff_model_files: bool = False) -> VocabularyMap:
     return VocabularyCompiler(manifest, base_path, strict, sniff_model_files).compile()
@@ -636,9 +643,7 @@ def accumulate_picklist_one_of(
 
             headers, data_rows = read_sheet(path, step.sheet or step.step_id())
         else:
-            rdr = csv.reader(io.StringIO(storage.read_text(path)))
-            headers = next(rdr)
-            data_rows = list(rdr)
+            headers, data_rows = _read_csv_rows(path)
         try:
             idx = headers.index(identifier_label)
         except ValueError:

@@ -1,6 +1,6 @@
-"""Coercion parity fuzz: the Spark column coercions (F6-F9) must agree
-with the independent reference-semantics oracle (process_value) on a
-seeded random corpus + a bank of hand-picked edge cases. This is the
+"""Coercion parity fuzz: the Spark SQL coercions (F6-F9) must agree
+with the independent reference-semantics oracle (process_value) on two
+seeded random corpora + a bank of hand-picked edge cases. This is the
 cheap insurance that the JVM expressions and the reference's Rust
 parsers keep identical accept/reject boundaries (the fixture corpus
 only exercises a narrow slice of them).
@@ -54,32 +54,38 @@ def canon(obj: str, kind: str) -> tuple[str, str]:
 
 @pytest.mark.parametrize("kind", ["Integer", "Decimal", "Boolean", "Date"])
 def test_coercion_parity_fuzz(kind):
+    import zlib
+
     from pyspark.sql import functions as F
 
     from csv_to_jsonld_processor_spark.coercion import (
-        coerce_boolean,
-        coerce_date,
-        coerce_decimal,
-        coerce_integer,
-        coercion_kind_flags,
+        coerce_boolean_sql,
+        coerce_date_sql,
+        coerce_decimal_sql,
+        coerce_integer_sql,
+        coercion_kind_flags_sql,
     )
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    spark = get_spark("coercion-fuzz", cpus=4)
-    import zlib
-
-    values = EDGE_CASES + _rand_strings(400, seed=zlib.crc32(kind.encode()))
+    spark = get_spark("coercion-fuzz")
+    values = (
+        EDGE_CASES
+        + _rand_strings(400, seed=zlib.crc32(kind.encode()))
+        + _rand_strings(3000, seed=20260817)
+    )
     df = spark.createDataFrame([(v,) for v in values], "v string")
     fn = {
-        "Integer": coerce_integer,
-        "Decimal": coerce_decimal,
-        "Boolean": coerce_boolean,
-        "Date": coerce_date,
+        "Integer": coerce_integer_sql,
+        "Decimal": coerce_decimal_sql,
+        "Boolean": coerce_boolean_sql,
+        "Date": coerce_date_sql,
     }[kind]
     got = {
         r.v: canon(r.obj, r.kind)
         for r in df.select(
-            "v", fn(F.col("v")).alias("obj"), coercion_kind_flags(kind, F.col("v")).alias("kind")
+            "v",
+            F.expr(fn("v")).alias("obj"),
+            F.expr(coercion_kind_flags_sql(kind, "v")).alias("kind"),
         ).collect()
     }
     mismatches = []
@@ -88,55 +94,3 @@ def test_coercion_parity_fuzz(kind):
         if got[v] != want:
             mismatches.append((v, got[v], want))
     assert not mismatches, f"{kind}: {mismatches[:10]} ({len(mismatches)} total)"
-
-
-@pytest.mark.parametrize("kind", ["Integer", "Decimal", "Boolean", "Date"])
-def test_sql_twins_equal_column_builders(kind):
-    """The *_sql string twins must produce BIT-IDENTICAL results to the
-    Column builders on the edge-case bank + seeded fuzz corpus — the
-    contract that lets instance_steps build one F.expr per header
-    instead of thousands of py4j calls."""
-    from pyspark.sql import functions as F
-
-    from csv_to_jsonld_processor_spark.coercion import (
-        coerce_boolean,
-        coerce_boolean_sql,
-        coerce_date,
-        coerce_date_sql,
-        coerce_decimal,
-        coerce_decimal_sql,
-        coerce_integer,
-        coerce_integer_sql,
-        coercion_kind_flags,
-        coercion_kind_flags_sql,
-    )
-    from csv_to_jsonld_processor_spark.session import get_spark
-
-    spark = get_spark("coercion-sql-twins")
-    corpus = EDGE_CASES + _rand_strings(3000, seed=20260817)
-    df = spark.createDataFrame([(s,) for s in corpus], "v string")
-
-    col_fn = {
-        "Integer": coerce_integer,
-        "Decimal": coerce_decimal,
-        "Boolean": coerce_boolean,
-        "Date": coerce_date,
-    }[kind]
-    sql_fn = {
-        "Integer": coerce_integer_sql,
-        "Decimal": coerce_decimal_sql,
-        "Boolean": coerce_boolean_sql,
-        "Date": coerce_date_sql,
-    }[kind]
-
-    out = df.select(
-        "v",
-        col_fn(F.col("v")).alias("a"),
-        F.expr(sql_fn("v")).alias("b"),
-        coercion_kind_flags(kind, F.col("v")).alias("ka"),
-        F.expr(coercion_kind_flags_sql(kind, "v")).alias("kb"),
-    ).collect()
-    bad = [(r.v, r.a, r.b) for r in out if r.a != r.b] + [
-        (r.v, r.ka, r.kb) for r in out if r.ka != r.kb
-    ]
-    assert not bad, bad[:10]

@@ -20,7 +20,7 @@ from csv_to_jsonld_processor_spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark("eventops", cpus=4)
+    return get_spark("eventops")
 
 
 # (event_type, props) — one of each hostile shape, plus clean rows

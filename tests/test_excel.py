@@ -126,7 +126,7 @@ def test_excel_manifest_end_to_end(tmp_path, xlsx):
     same positional plan, coercions included."""
     import shutil
 
-    from csv_to_jsonld_processor_spark.operators.instance_steps import build_instance_triples
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
     from csv_to_jsonld_processor_spark.session import get_spark
 
     d = tmp_path
@@ -169,9 +169,9 @@ def test_excel_manifest_end_to_end(tmp_path, xlsx):
         }
     )
     assert m.validate() == []
-    spark = get_spark("excel-test", cpus=4)
+    spark = get_spark("excel-test")
     vocab = compile_vocabulary(m, str(d))
-    triples = {tuple(r) for r in build_instance_triples(spark, m, vocab, str(d)).collect()}
+    triples = {tuple(r) for r in build_instance_outputs(spark, m, vocab, str(d))[0].collect()}
     assert ("T1", "@type", "Thing", "type") in triples
     assert ("T1", "Thing Name", "Widget", "string") in triples
     assert ("T1", "Since", "2024-01-01", "string") in triples

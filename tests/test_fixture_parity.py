@@ -53,12 +53,12 @@ def vocab(manifest):
 
 
 def test_fixture_triple_parity(spark, manifest, vocab):
-    from csv_to_jsonld_processor_spark.operators.instance_steps import build_instance_triples
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
     from oracle_reference import oracle_triples
 
     engine = {
         canon(tuple(r))
-        for r in build_instance_triples(spark, manifest, vocab, FIXTURES).collect()
+        for r in build_instance_outputs(spark, manifest, vocab, FIXTURES)[0].collect()
     }
     oracle = {canon(t) for t in oracle_triples(manifest, vocab, FIXTURES)}
 

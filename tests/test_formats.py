@@ -18,7 +18,7 @@ SF = "/root/testdata/sf0.001"
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("formats", cpus=4)
+    return get_spark("formats")
 
 
 def _rows(df):

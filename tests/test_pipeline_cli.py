@@ -108,7 +108,7 @@ def test_csv_scan_accepts_uri_paths(tmp_path):
 
     p = tmp_path / "t.csv"
     p.write_text("Thing ID,Thing Name\nT1,Widget\n")
-    spark = get_spark("uri-scan", cpus=4)
+    spark = get_spark("uri-scan")
     df, headers = read_csv_positional(spark, f"file://{p}")
     assert headers == ["Thing ID", "Thing Name"]
     assert [tuple(r) for r in df.collect()] == [("T1", "Widget")]

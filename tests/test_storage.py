@@ -54,9 +54,7 @@ def test_file_uri_manifest_pipeline_parity(spark, tmp_path):
     path or by file:// URI — manifest JSONC, model CSV, and instance
     CSVs all resolve through the Hadoop FS on the URI run."""
     from csv_to_jsonld_processor_spark.manifest import Manifest
-    from csv_to_jsonld_processor_spark.operators.instance_steps import (
-        build_instance_triples,
-    )
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
     from csv_to_jsonld_processor_spark.vocabulary import compile_vocabulary
 
     d = tmp_path / "corpus"
@@ -71,7 +69,7 @@ def test_file_uri_manifest_pipeline_parity(spark, tmp_path):
     def triples(base):
         m = Manifest.from_file(storage.join_path(base, "manifest.jsonc"))
         vocab = compile_vocabulary(m, base, strict=False)
-        df = build_instance_triples(spark, m, vocab, base)
+        df = build_instance_outputs(spark, m, vocab, base)[0]
         return {tuple(r) for r in df.collect()}
 
     local = triples(str(d))

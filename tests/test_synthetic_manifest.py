@@ -119,11 +119,11 @@ def test_vocab_picklist_label_injection(corpus):
 
 
 def test_synthetic_triples(spark, corpus):
-    from csv_to_jsonld_processor_spark.operators.instance_steps import build_instance_triples
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
 
     m = Manifest.from_dict(MANIFEST)
     vocab = compile_vocabulary(m, corpus)
-    triples = {tuple(r) for r in build_instance_triples(spark, m, vocab, corpus).collect()}
+    triples = {tuple(r) for r in build_instance_outputs(spark, m, vocab, corpus)[0].collect()}
 
     # namespaceIris: subjects are kebab(class)/id
     assert ("gadget/G1", "@type", "Gadget", "type") in triples
@@ -149,12 +149,12 @@ def test_synthetic_triples(spark, corpus):
 
 
 def test_oracle_agrees_on_synthetic(spark, corpus):
-    from csv_to_jsonld_processor_spark.operators.instance_steps import build_instance_triples
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
     from oracle_reference import oracle_triples
 
     m = Manifest.from_dict(MANIFEST)
     vocab = compile_vocabulary(m, corpus)
-    engine = {tuple(r) for r in build_instance_triples(spark, m, vocab, corpus).collect()}
+    engine = {tuple(r) for r in build_instance_outputs(spark, m, vocab, corpus)[0].collect()}
     oracle = oracle_triples(m, vocab, corpus)
     assert engine == oracle, (
         f"engine-only={sorted(engine - oracle)[:6]} oracle-only={sorted(oracle - engine)[:6]}"
@@ -236,7 +236,7 @@ def test_violations_lenient(spark, corpus):
 
     m = Manifest.from_dict(MANIFEST)
     vocab = compile_vocabulary(m, corpus)
-    triples_df, violations_df = build_instance_outputs(spark, m, vocab, corpus, strict=False)
+    _, violations_df = build_instance_outputs(spark, m, vocab, corpus, strict=False)
 
     # A4: one_of accumulated from the PicklistStep rows, base-expanded
     assert vocab.classes["Color"].one_of == [
@@ -256,12 +256,6 @@ def test_violations_lenient(spark, corpus):
     assert not any(r[0] == "picklist_validation" and r[3] in ("color/red", "color/blue") for r in v)
     # Decimal fallback ('bad') must NOT warn — the reference is silent there
     assert not any(r[3] == "bad" for r in v)
-    # triples identical to the plain builder
-    from csv_to_jsonld_processor_spark.operators.instance_steps import build_instance_triples
-
-    vocab2 = compile_vocabulary(m, corpus)
-    plain = {tuple(r) for r in build_instance_triples(spark, m, vocab2, corpus).collect()}
-    assert {tuple(r) for r in triples_df.collect()} == plain
 
 
 def test_strict_mode_fails_run(spark, corpus, tmp_path):
@@ -382,3 +376,39 @@ def test_violation_count_is_exact_past_10k(spark, corpus, tmp_path):
         assert written > 10_000
         assert outcome.counts["violations"] == written, strict
         assert len(outcome.errors if strict else outcome.warnings) == 10_000
+
+
+@pytest.mark.parametrize("empty", ["model/Model.csv", "instances/Colors.csv", "instances/Gadgets.csv"])
+def test_empty_csv_names_the_file(spark, corpus, tmp_path, empty):
+    """A 0-byte model, picklist or basic-instance CSV fails the run with a
+    ValueError that names the file, not a bare StopIteration."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    d = tmp_path / "corpus"
+    shutil.copytree(corpus, d)
+    (d / empty).write_text("")
+    with pytest.raises(ValueError, match="empty CSV, no header row") as err:
+        Pipeline(Manifest.from_dict(MANIFEST), d).run(spark, tmp_path / "out")
+    assert empty.split("/")[1] in str(err.value)
+
+
+def test_eav_missing_property_column_names_it(spark, corpus, tmp_path):
+    """A PropertiesInstanceStep CSV without its Property ID column fails
+    with the column and the path, like the sibling steps' messages."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+
+    d = tmp_path / "corpus"
+    shutil.copytree(corpus, d)
+    (d / "instances" / "GadgetProps.csv").write_text("Gadget ID,Property,Property Value\nG1,Weight,3\n")
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["sequence"].append(
+        {
+            "path": "GadgetProps.csv",
+            "@type": ["CSVImportStep", "PropertiesInstanceStep"],
+            "instanceType": "Gadget",
+        }
+    )
+    m = Manifest.from_dict(manifest)
+    vocab = compile_vocabulary(m, str(d))
+    with pytest.raises(ValueError, match="'Property ID' not found in .*GadgetProps.csv"):
+        build_instance_outputs(spark, m, vocab, str(d))

@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    return get_spark("upsert", cpus=4)
+    return get_spark("upsert")
 
 
 def test_merge_upsert_provenance_and_null_safety(spark):

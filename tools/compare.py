@@ -55,7 +55,7 @@ def main():
     oracles = entry_mod.oracle_sql()
     only = set(sys.argv[2:]) or set(qs)
 
-    spark = get_spark("compare", cpus=8)
+    spark = get_spark("compare")
 
     def fresh_con():
         c = duckdb.connect()

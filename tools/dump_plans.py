@@ -27,7 +27,7 @@ def main() -> None:
 
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    spark = get_spark("dump_plans", cpus=8)
+    spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

@@ -161,7 +161,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
-    spark = get_spark("plan-audit", cpus=8)
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     sf = "/root/testdata/sf0.001"

@@ -92,9 +92,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from csv_to_jsonld_processor_spark.session import get_spark
 
-    spark = get_spark(
-        "shuffle-audit", cpus=16, extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("shuffle-audit", extra_conf={"spark.ui.enabled": "true"})
     qs = entry.queries()
     rows = []
     for name in names:
