@@ -1,11 +1,11 @@
 """Predicate canonicalization + graph materialization + validation.
 
 Canonicalization is the web-text analog of header→vocabulary-term
-mapping (reference P1/P5): surface phrases resolve through a broadcast
-@context map to canonical predicate IRIs. Unresolvable surfaces and
-link failures route to a ``violations`` table instead of killing the
-job — the reference's warn-vs-error ProcessingState (A7) re-expressed
-as data.
+mapping (reference P1/P5): surface phrases resolve through the @context
+map, a ``literal_map`` column, to canonical predicate IRIs.
+Unresolvable surfaces and link failures route to a ``violations`` table
+instead of killing the job — the reference's warn-vs-error
+ProcessingState (A7) re-expressed as data.
 
 Materialization writes ``entities`` / ``predicates`` / ``edges`` tables
 partitioned by a deterministic bucket of the subject (hash-bucketed so
@@ -27,8 +27,16 @@ N_BUCKETS = 64
 
 
 def predicate_context(predicates: list[tuple]) -> dict[str, str]:
-    """surface phrase → canonical predicate IRI (broadcast artifact)."""
+    """surface phrase → canonical predicate IRI (the @context map)."""
     return {surface: KG_TERMS + canon for surface, canon, _s, _o in predicates}
+
+
+def literal_map(d: dict) -> F.Column:
+    """A driver rule table as a map of literals: ``literal_map(d)[col]`` is a
+    row-local lookup (no join, no job), null for a key missing from ``d``.
+    It scans the keys; vocabulary-sized tables stay broadcast joins."""
+    pairs = [F.lit(x) for kv in d.items() for x in kv]
+    return F.create_map(*pairs) if pairs else F.create_map().cast("map<string,string>")
 
 
 def entity_iri_col(cls_col: F.Column, name_col: F.Column) -> F.Column:
@@ -46,10 +54,7 @@ def canonicalize_edges(linked: DataFrame, context: dict[str, str]) -> tuple[Data
     edges: (subj, pred, obj, url, sent_idx) with IRIs everywhere.
     violations: unlinked subject/object or unknown predicate surface.
     """
-    spark = linked.sparkSession
-    ctx = spark.createDataFrame(list(context.items()), ["surface", "pred_iri"])
-
-    j = linked.join(F.broadcast(ctx), linked["pred_surface"] == ctx["surface"], "left")
+    j = linked.withColumn("pred_iri", literal_map(context)[F.col("pred_surface")])
 
     ok = (
         j.where(
@@ -97,12 +102,10 @@ def validate_edges(edges: DataFrame, domain_range: dict[str, tuple[str, str]]) -
 
     domain_range: canonical predicate IRI → (subj class, obj class).
     Returns additional violations."""
-    spark = edges.sparkSession
-    dr = spark.createDataFrame(
-        [(p, d, r) for p, (d, r) in domain_range.items()],
-        ["_pred", "_want_domain", "_want_range"],
-    )
-    j = edges.join(F.broadcast(dr), edges["pred"] == dr["_pred"], "left")
+    want_domain = literal_map({p: d for p, (d, _r) in domain_range.items()})
+    want_range = literal_map({p: r for p, (_d, r) in domain_range.items()})
+    j = edges.withColumn("_want_domain", want_domain[F.col("pred")]) \
+        .withColumn("_want_range", want_range[F.col("pred")])
     return (
         j.where(
             (F.col("subj_class") != F.col("_want_domain"))
@@ -126,15 +129,15 @@ def validate_cardinality(edges: DataFrame, max_counts: dict[str, int]) -> DataFr
     object count for a functional predicate exceeds the cap is a
     violation (e.g. two different birthPlaces). One partial-aggregated
     groupBy on (subj, pred) — at 100 TB the shuffle carries only the
-    (subj, pred) key space, and the cap table broadcasts."""
-    spark = edges.sparkSession
-    mc = spark.createDataFrame(
-        [(p, int(c)) for p, c in max_counts.items()], ["_pred", "_max_count"]
+    (subj, pred) key space of the capped predicates, filtered before it."""
+    caps = {p: int(c) for p, c in max_counts.items()}
+    counts = (
+        edges.where(F.col("pred").isin(list(caps)))
+        .groupBy("subj", "pred").agg(F.countDistinct("obj").alias("n_obj"))
+        .withColumn("_max_count", literal_map(caps)[F.col("pred")])
     )
-    counts = edges.groupBy("subj", "pred").agg(F.countDistinct("obj").alias("n_obj"))
     return (
-        counts.join(F.broadcast(mc), counts["pred"] == mc["_pred"])
-        .where(F.col("n_obj") > F.col("_max_count"))
+        counts.where(F.col("n_obj") > F.col("_max_count"))
         .select(
             F.lit("shacl_cardinality").alias("stage"),
             F.lit("max_count_exceeded").alias("rule"),

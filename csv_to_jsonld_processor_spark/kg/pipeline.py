@@ -4,7 +4,7 @@ pages (Iceberg/parquet) → ONE mapInPandas stage (byte-pinned text
 extraction → mention + triple extraction → entity linking against the
 broadcast KB dict; join-based strategies run it unlinked and link by
 blocked join, broadcast or salted shuffle)
-→ predicate canonicalization (broadcast @context)
+→ predicate canonicalization (@context literal map)
 → SHACL-style validation → entities/predicates/edges (+violations)
 with per-partition lineage when a ledger dir is given.
 With ``out_dir`` the linked relation is a lazy local checkpoint, computed
@@ -42,6 +42,15 @@ MAX_COUNTS = {
 }
 
 
+def _all_violations(canon_viol: DataFrame, edges: DataFrame) -> DataFrame:
+    """canonicalize's link/context rows + the three SHACL-style checks on edges."""
+    return (
+        canon_viol.unionByName(validate_edges(edges, DOMAIN_RANGE))
+        .unionByName(validate_cardinality(edges, MAX_COUNTS))
+        .unionByName(validate_node_iris(edges))
+    )
+
+
 def build_kg(
     spark: SparkSession,
     pages: DataFrame,
@@ -70,10 +79,7 @@ def build_kg(
         linked = linked.localCheckpoint(eager=False)
 
     edges, viol = canonicalize_edges(linked, predicate_context(predicates))
-    viol = viol.unionByName(validate_edges(edges, DOMAIN_RANGE))
-    viol = viol.unionByName(validate_cardinality(edges, MAX_COUNTS))
-    viol = viol.unionByName(validate_node_iris(edges))
-
+    viol = _all_violations(viol, edges)
     result = {"edges": edges, "violations": viol}
     if out_dir:
         result["counts"] = materialize_graph(edges, viol, out_dir)
@@ -145,10 +151,6 @@ def build_kg_resumable(
         fail_after_parts=_fail("edges"),
     ).drop("part_id")
 
-    viol = canonicalize_edges(
-        spark.read.parquet(f"{work_dir}/linked").drop("part_id"), ctx
-    )[1]
-    viol = viol.unionByName(validate_edges(edges, DOMAIN_RANGE))
-    viol = viol.unionByName(validate_cardinality(edges, MAX_COUNTS))
-    viol = viol.unionByName(validate_node_iris(edges))
+    linked_all = spark.read.parquet(f"{work_dir}/linked").drop("part_id")
+    viol = _all_violations(canonicalize_edges(linked_all, ctx)[1], edges)
     return {"edges": edges, "violations": viol, "ledger": ledger}

@@ -23,10 +23,6 @@ INSTANCE_STEPS = {
 }
 
 
-class ManifestError(ValueError):
-    pass
-
-
 @dataclass
 class ColumnOverride:
     column: str

@@ -17,7 +17,7 @@ already materialized. Rules mirror the reference's warning categories:
 - ``boolean_validation`` failed Boolean coercion (value_processor.rs:116-146)
 - ``date_validation``    failed Date parse (value_processor.rs:17-80)
 - ``picklist_validation`` missing one_of / value not in picklist
-  (value_processor.rs:182-231), enforced via broadcast anti-join
+  (value_processor.rs:182-231), enforced as a ``NOT isin(one_of)`` filter
 
 Decimal failures are intentionally NOT routed: the reference's Decimal
 arm falls back to the cleaned string silently (value_processor.rs:106-114)
@@ -152,9 +152,9 @@ def _picklist_violations(
     namespaceIris off (the reference builds the prefixed IRI
     unconditionally at :208-216 while one_of entries are only prefixed
     when namespacing is on, so every value "fails" in that mode; quirk
-    reproduced faithfully). Enforcement is a broadcast anti-join against
-    the one_of set — scale-safe: the enum side broadcasts, the value
-    side never shuffles."""
+    reproduced faithfully). Enforcement is a ``NOT isin(one_of)`` filter
+    — the enum is a driver list, so the check is a row-local expression
+    (a hashed InSet past 10 entries) and the value side never shuffles."""
     out: list[DataFrame] = []
     sev = "error" if strict else "warning"
     base = manifest.instances.base_iri
@@ -199,11 +199,8 @@ def _picklist_violations(
             raw_value = F.col("obj")
         check_iri = F.concat(F.lit(joined_prefix), raw_value)
 
-        enum_df = spark.createDataFrame([(v,) for v in one_of], "check_iri string")
-        viol = (
-            triples.where(F.col("pred") == p.name)
-            .withColumn("check_iri", check_iri)
-            .join(F.broadcast(enum_df), "check_iri", "left_anti")
+        out.append(
+            triples.where((F.col("pred") == p.name) & ~check_iri.isin(one_of))
             .select(
                 F.lit(stage).alias("stage"),
                 F.lit("picklist_validation").alias("rule"),
@@ -213,7 +210,6 @@ def _picklist_violations(
                 F.lit(sev).alias("severity"),
             )
         )
-        out.append(viol)
     return out
 
 

@@ -5,7 +5,7 @@ shape of a live crawl feed at 10^12 documents).
 
 Why this works unchanged: every stage of the construction pipeline is
 STATELESS per row — Arrow-batched extract+link (mapInPandas with the
-KB broadcast as a dict), broadcast @context canonicalization, filter
+KB broadcast as a dict), literal-map @context canonicalization, filter
 validations.  A stateless pipeline is micro-batch-invariant, so the
 streaming run must produce the exact multiset of edges the batch run
 produces over the same corpus; the registered query pins that with the
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..checksum import u32
 from ..sources.pages import ENTITIES, PAGES_SCHEMA, PREDICATES
-from ..kg.graph import canonicalize_edges, predicate_context
+from ..kg.graph import canonicalize_edges, literal_map, predicate_context
 from ..kg.link import kb_index
 from ..kg.mentions import extract_link_from_html
 from .events import run_stream_over_dir
@@ -88,20 +88,19 @@ def kg_edge_window_counts_stream(
     ``warc_ts`` rides through the fused UDF via its ``passthrough``
     hook and the watermark is declared on the UDF OUTPUT (a mapInPandas
     barrier produces new attributes, so a pre-UDF watermark would not
-    propagate). Predicate canonicalization is the same broadcast
-    @context lookup as kg/graph.py, applied as a literal map column
+    propagate). Predicate canonicalization is kg/graph.py's
+    ``literal_map`` @context lookup, applied inline
     (``canonicalize_edges`` would drop ``warc_ts``); rows failing linking
     or context lookup are dropped exactly as canonicalize_edges routes
     them to violations. Drained complete-mode for the bounded
     stream==batch test (run_stream_over_dir explains why); production
     runs append with windows finalizing as the watermark passes them."""
-    pred_map = F.create_map(*[F.lit(x) for kv in _CTX.items() for x in kv])
 
     def transform(stream: DataFrame) -> DataFrame:
         linked = extract_link_from_html(
             stream, _SURFACES, _GAZETTEER, _KB_IDX, passthrough=("warc_ts",)
         )
-        edges = linked.withColumn("pred", pred_map[F.col("pred_surface")]).where(
+        edges = linked.withColumn("pred", literal_map(_CTX)[F.col("pred_surface")]).where(
             F.col("subj_mention_entity").isNotNull()
             & F.col("obj_mention_entity").isNotNull()
             & F.col("pred").isNotNull()

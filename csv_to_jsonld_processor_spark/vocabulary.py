@@ -610,7 +610,7 @@ def accumulate_picklist_one_of(
     Driver-side CSV read: picklist domains are dimension-sized by
     definition (they enumerate an enum); at cluster scale swap in a
     Spark scan + collect of the single id column — the accumulated set
-    broadcasts either way. Returns lookup-failure messages (the
+    is a driver-side list either way. Returns lookup-failure messages (the
     reference's warn/error text) for the caller to route."""
     from .iri import to_kebab_case
 

@@ -103,6 +103,48 @@ def test_materialize_and_violations(spark, pages, tmp_path):
         assert counts == on_disk, strategy
 
 
+def test_build_kg_out_dir_job_ceiling(spark, pages, tmp_path):
+    """The rule tables (context, domain/range, maxCount) are column
+    expressions, not broadcast DataFrames, so none of them launches a
+    job: a warm build_kg(out_dir=) call runs at most 8 (15 with joins)."""
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    build_kg(spark, pages, out_dir=str(tmp_path / "warm"))
+    sc = spark.sparkContext
+    group = f"build-kg:{tmp_path}"
+    sc.setJobGroup(group, group)
+    try:
+        build_kg(spark, pages, out_dir=str(tmp_path / "kg"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 8, jobs
+
+
+def test_literal_map_reads_missing_keys_as_null(spark):
+    """A key the rule table lacks, a null key and any key of an empty
+    table all look up null, as the left join against the table's rows did."""
+    from pyspark.sql import functions as F
+
+    from csv_to_jsonld_processor_spark.kg.graph import literal_map
+
+    df = spark.createDataFrame([("a",), ("b",), (None,)], "k string")
+    got = df.select("k", literal_map({"a": "x"})[F.col("k")].alias("v")).collect()
+    assert sorted((r.k or "", r.v or "") for r in got) == [("", ""), ("a", "x"), ("b", "")]
+    assert df.where(literal_map({})[F.col("k")].isNotNull()).count() == 0
+
+
+def test_fused_graph_plans_have_no_join(spark, pages):
+    """Canonicalize and the SHACL checks look the rule tables up per row:
+    the fused edges and violations plans hold no join."""
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    out = build_kg(spark, pages)
+    for name in ("edges", "violations"):
+        plan = out[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, (name, plan)
+
+
 @pytest.mark.parametrize("strategy", ["fused_broadcast", "broadcast"])
 def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path, strategy):
     """With out_dir every sink (edges, entities, predicates, the four

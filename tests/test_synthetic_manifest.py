@@ -258,6 +258,35 @@ def test_violations_lenient(spark, corpus):
     assert not any(r[3] == "bad" for r in v)
 
 
+@pytest.mark.parametrize("strict", [False, True])
+def test_picklist_with_empty_enum(spark, corpus, strict):
+    """A Picklist header whose class is found but has no PicklistStep
+    rows: one "no picklist enums" row, then every value fails membership
+    against the empty enum (value_processor.rs:189-206)."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["sequence"] = [
+        s for s in manifest["instances"]["sequence"] if "PicklistStep" not in s["@type"]
+    ]
+    m = Manifest.from_dict(manifest)
+    vocab = compile_vocabulary(m, corpus)
+    _, violations_df = build_instance_outputs(spark, m, vocab, corpus, strict=strict)
+    sev = "error" if strict else "warning"
+
+    rows = [
+        (r.subj, r.value, r.severity)
+        for r in violations_df.where("rule = 'picklist_validation'").collect()
+    ]
+    assert sorted(rows, key=str) == sorted([
+        (None, "Class match found (color) for picklist header but no "
+               "picklist enums defined on class", sev),
+        ("gadget/G1", "color/red", sev),
+        ("gadget/G2", "color/blue", sev),
+        ("gadget/G3", "color/green", sev),
+    ], key=str)
+
+
 def test_strict_mode_fails_run(spark, corpus, tmp_path):
     """Strict escalates violations to errors and the pipeline run fails
     (reference is_strict Err path); lenient run succeeds with warnings."""

@@ -99,15 +99,23 @@ def main():
             # recycling the connection frees it (views re-registered)
             con.close()
             con = fresh_con()
-        sdf = fn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = sdf.columns
+        try:
+            sdf = fn(spark, sf_dir)
+            srows = [tuple(r) for r in sdf.collect()]
+            scols = sdf.columns
+            if name in oracles:
+                cur = con.execute(oracles[name])
+                ocols = [d[0] for d in cur.description]
+                orows = cur.fetchall()
+        except Exception as e:
+            # one broken query is a failure, not the end of the run
+            failures += 1
+            msg = (str(e).strip().splitlines() or [""])[0]
+            print(f"{name:40s} ERROR {type(e).__name__}: {msg}")
+            continue
         if name not in oracles:
             print(f"{name:40s} rows={len(srows):6d} (rows-only check, no oracle)")
             continue
-        cur = con.execute(oracles[name])
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
         ok_n = len(srows) == len(orows)
         ok_c = sorted(scols) == sorted(ocols)
         ok_v = value_hash(scols, srows) == value_hash(ocols, orows)
@@ -127,6 +135,7 @@ def main():
                 if a != b:
                     print(f"  spark : {a}\n  oracle: {b}")
                     break
+    print(f"{n_run - failures} of {n_run} queries OK, {failures} failed")
     sys.exit(1 if failures else 0)
 
 
