@@ -228,6 +228,105 @@ def test_pivot_children_match_oracle(spark, tmp_path, namespaced):
     assert any(p == "Unit Price" and o == "bad" and k == "string" for s, p, o, k in engine)
 
 
+def _engine_and_oracle(spark, root, manifest, model_csv, instance_csvs):
+    """Writes a corpus under ``root`` → (engine triples, oracle triples)."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+    from oracle_reference import oracle_triples
+
+    (root / "model").mkdir()
+    (root / "instances").mkdir()
+    (root / "model" / "Model.csv").write_text(model_csv)
+    for name, text in instance_csvs.items():
+        (root / "instances" / name).write_text(text)
+    m = Manifest.from_dict(manifest)
+    vocab = compile_vocabulary(m, str(root))
+    engine = {tuple(r) for r in build_instance_outputs(spark, m, vocab, str(root))[0].collect()}
+    return engine, oracle_triples(m, vocab, str(root))
+
+
+# two properties resolve to their camel key, F1 passes through raw; rows
+# with an empty id, property or value emit nothing
+GADGET_PROPS_CSV = """Gadget ID,Property ID,Property Value
+G1,weight,3.5
+G1,gadgetName,Widget
+G2,F1,raw feature
+G2,,skipped
+,weight,skipped
+G3,counts,
+"""
+
+
+@pytest.mark.parametrize("namespaced", [True, False], ids=["namespaced", "plain"])
+def test_eav_step_matches_oracle(spark, tmp_path, namespaced):
+    """R2 + J2: each EAV row emits its value under the resolved property
+    key plus the class @type; engine triples equal the oracle's."""
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["namespaceIris"] = namespaced
+    manifest["instances"]["sequence"] = [
+        {
+            "path": "GadgetProps.csv",
+            "@type": ["CSVImportStep", "PropertiesInstanceStep"],
+            "instanceType": "Gadget",
+        }
+    ]
+    engine, oracle = _engine_and_oracle(
+        spark, tmp_path, manifest, MODEL_CSV, {"GadgetProps.csv": GADGET_PROPS_CSV}
+    )
+    assert engine == oracle, (
+        f"engine-only={sorted(engine - oracle)[:6]} oracle-only={sorted(oracle - engine)[:6]}"
+    )
+    g1 = "gadget/G1" if namespaced else "G1"
+    assert (g1, "weight", "3.5", "string") in engine
+    assert (g1, "@type", "Gadget", "type") in engine
+    assert any(p == "F1" for s, p, o, k in engine)
+    assert not any(o == "skipped" for s, p, o, k in engine)
+
+
+SUBCLASS_MODEL_CSV = """Class Name,Class Description,Property Name,Property Description,Type,Class Range,
+Gadget,A gadget,Gadget ID,id,@id,,
+Gadget,A gadget,Gadget Name,name,string,,
+pocket gadget,A small gadget,Pocket Size,size,string,,
+"""
+
+# the Kind cell resolves to a class key (PascalCase) or passes through
+# raw; an empty header column and rows with an empty id or kind drop out
+GADGET_KINDS_CSV = """Gadget ID,Kind,Gadget Name,Notes,
+G1,pocket gadget,Widget,n1,x
+G2,Gadget,Sprocket,,
+G3,Unknown Kind,Doodad,n3,
+,Gadget,NoId,n4,
+G4,,NoKind,n5,
+"""
+
+
+@pytest.mark.parametrize("namespaced", [True, False], ids=["namespaced", "plain"])
+def test_subclass_step_matches_oracle(spark, tmp_path, namespaced):
+    """R3 + J3: a SubClass row is typed with the parent class and its
+    resolved subclass and keeps every other cell as a raw string; engine
+    triples equal the oracle's."""
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["namespaceIris"] = namespaced
+    manifest["instances"]["sequence"] = [
+        {
+            "path": "GadgetKinds.csv",
+            "@type": ["CSVImportStep", "SubClassInstanceStep"],
+            "instanceType": "Gadget",
+            "subClassProperty": "Kind",
+        }
+    ]
+    engine, oracle = _engine_and_oracle(
+        spark, tmp_path, manifest, SUBCLASS_MODEL_CSV, {"GadgetKinds.csv": GADGET_KINDS_CSV}
+    )
+    assert engine == oracle, (
+        f"engine-only={sorted(engine - oracle)[:6]} oracle-only={sorted(oracle - engine)[:6]}"
+    )
+    g1 = "gadget/G1" if namespaced else "G1"
+    assert (g1, "@type", "PocketGadget", "type") in engine
+    assert (g1, "Notes", "n1", "string") in engine
+    assert any(o == "Unknown Kind" and p == "@type" for s, p, o, k in engine)
+    assert not any(o in ("NoId", "NoKind") for s, p, o, k in engine)
+
+
 def test_violations_lenient(spark, corpus):
     """A7 + J4: unknown header, failed Integer coercion, and picklist
     membership failures route to the violations DataFrame; Decimal
