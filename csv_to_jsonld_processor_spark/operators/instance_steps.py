@@ -15,8 +15,11 @@ column expressions over a CSV/parquet scan:
 - R1 pivot columns → deterministic content-hash child ids (``sha2``)
   instead of the reference's UUIDv4 (processor_impl.rs:233) — see
   SURVEY §2.8: UUIDs make runs unreproducible; content hashes keep
-  blank-node identity stable across runs and cluster sizes
-- R2 EAV → per-row triple emission + broadcast property resolve (J2)
+  blank-node identity stable across runs and cluster sizes. The id is
+  a per-row column; each group adds ``IF(any value, child triples ++
+  [parent→child edge], [])`` to the row's triple arrays
+- R2 EAV → a value triple and an @type triple per row, after a
+  broadcast property resolve (J2)
 - R3 subclass typing → broadcast class resolve (J3)
 - A1 merge-by-@id → the triple table IS the merged form: set-union
   semantics fall out of ``dropDuplicates`` on (subj, pred, obj)
@@ -25,11 +28,14 @@ The output is the long/normalized triple table (FIXTURES.md §C):
 ``(subj, pred, obj, obj_kind)`` where obj_kind ∈
 {string, number, boolean, ref, type}.
 
-Scale notes: each step is one scan → narrow transforms → explode; no
-shuffle until the final ``dropDuplicates`` (one exchange on the triple
-key). Vocabulary lookups are plan-time constants or broadcast joins —
-never a shuffled join. At 100 TB the explode fan-out is bounded by
-(#columns × values-per-cell), and AQE handles post-explode skew.
+Scale notes: each step is one scan → narrow transforms → ONE explode of
+``(subj, pred, obj, obj_kind)`` structs (``_explode_triples``), like the
+reference's one pass per row (processor_impl.rs) — no step is a union
+of branches that each re-read its file. No shuffle until the final
+``dropDuplicates`` (one exchange on the triple key). Vocabulary lookups
+are plan-time constants or broadcast joins — never a shuffled join. At
+100 TB the explode fan-out is bounded by (#columns × values-per-cell),
+and AQE handles post-explode skew.
 
 Known reference bugs NOT reproduced (documented deviations):
 - unknown headers silently desync column indices in validate_headers
@@ -61,7 +67,7 @@ from ..coercion import (
 )
 from ..iri import expand_iri_with_base, to_kebab_case
 from ..manifest import ImportStep, Manifest
-from ..vocabulary import VocabularyMap
+from ..vocabulary import VocabularyMap, _identifier_label, _step_sheet
 
 _SEP = "\x1f"  # unit separator for deterministic child hashing
 
@@ -184,7 +190,8 @@ def plan_headers(
 # value expressions
 # --------------------------------------------------------------------------
 
-_TRIPLES_T = "array<struct<pred:string,obj:string,obj_kind:string>>"
+_VALUES_T = "array<struct<obj:string,obj_kind:string>>"
+_TRIPLES_T = "array<struct<subj:string,pred:string,obj:string,obj_kind:string>>"
 
 
 def _coerce_one_sql(kind: str, target: str | None, v: str, vocab: VocabularyMap,
@@ -211,11 +218,11 @@ def _coerce_one_sql(kind: str, target: str | None, v: str, vocab: VocabularyMap,
     return v  # String / ID
 
 
-def _values_expr_sql(step: ImportStep, plan: HeaderPlan, c: str,
-                     vocab: VocabularyMap, model_base_iri: str,
-                     namespace_iris: bool) -> str:
-    """array<struct<obj:string, obj_kind:string>> for the header cell
-    ``c``, as SQL text (lambda variable ``v`` is reserved by this builder).
+def _header_values_sql(step: ImportStep, plan: HeaderPlan, vocab: VocabularyMap,
+                       model_base_iri: str, namespace_iris: bool) -> str:
+    """array<struct<obj:string, obj_kind:string>> for the header's cell, as
+    SQL text: empty for an empty cell (lambda variable ``v`` is reserved
+    by this builder).
 
     R4: non-String typed cells split on the step delimiter (default ';'),
     each piece trimmed (processor_impl.rs:188-200). Each split+trimmed
@@ -224,6 +231,7 @@ def _values_expr_sql(step: ImportStep, plan: HeaderPlan, c: str,
     yields two number-kind values, and ' 42 ' is typed on the trimmed
     form.
     """
+    c = f"c{plan.index}"
     delim = step.delimit_values_on or ";"
     if plan.kind == "String":
         raw = f"array({c})"
@@ -231,27 +239,32 @@ def _values_expr_sql(step: ImportStep, plan: HeaderPlan, c: str,
         raw = f"transform(split({c}, {sql_str(re.escape(delim))}), x -> trim(x))"
     obj = _coerce_one_sql(plan.kind, plan.target, "v", vocab, model_base_iri, namespace_iris)
     flags = coercion_kind_flags_sql(plan.kind, "v")
-    return f"transform({raw}, v -> named_struct('obj', {obj}, 'obj_kind', {flags}))"
+    values = f"transform({raw}, v -> named_struct('obj', {obj}, 'obj_kind', {flags}))"
+    return f"IF({c} IS NOT NULL AND {c} != '', {values}, CAST(array() AS {_VALUES_T}))"
 
 
-def _triples_for_values_sql(pred: str, pairs: str) -> str:
-    """array<struct<pred,obj,obj_kind>> — one entry per value."""
-    return (
-        f"transform({pairs}, s -> named_struct('pred', {sql_str(pred)}, "
+def _triples_expr(subj: str, pred: str, values: str) -> Column:
+    """The triple array of ``values`` (SQL text) under the column ``subj``."""
+    return F.expr(
+        f"transform({values}, s -> named_struct('subj', {subj}, 'pred', {sql_str(pred)}, "
         "'obj', s.obj, 'obj_kind', s.obj_kind))"
     )
 
 
-def _header_triples_expr(step: ImportStep, plan: HeaderPlan, vocab: VocabularyMap,
-                         model_base_iri: str, namespace_iris: bool,
-                         pred: str | None = None) -> Column:
-    """One F.expr for a header's whole triple array (empty-cell guarded)."""
-    c = f"c{plan.index}"
-    pairs = _values_expr_sql(step, plan, c, vocab, model_base_iri, namespace_iris)
-    trip = _triples_for_values_sql(pred or plan.name, pairs)
-    return F.expr(
-        f"IF({c} IS NOT NULL AND {c} != '', {trip}, CAST(array() AS {_TRIPLES_T}))"
+def _triple(subj: Column, pred: Column | str, obj: Column | str, obj_kind: str) -> Column:
+    """One (subj, pred, obj, obj_kind) struct; a str pred or obj is a literal."""
+    def lit(x):
+        return F.lit(x) if isinstance(x, str) else x
+
+    return F.struct(
+        subj.alias("subj"), lit(pred).alias("pred"), lit(obj).alias("obj"),
+        F.lit(obj_kind).alias("obj_kind"),
     )
+
+
+def _explode_triples(df: DataFrame, arrays: list[Column]) -> DataFrame:
+    """One scan, one explode: each row's triple arrays, concatenated."""
+    return df.select(F.explode(F.flatten(F.array(*arrays))).alias("t")).select("t.*")
 
 
 # --------------------------------------------------------------------------
@@ -318,14 +331,15 @@ def read_step_positional(
     driver-sized manifest inputs, not lake tables — everything else is
     the distributed CSV scan. Empty cells normalize to null to match
     the CSV reader's semantics."""
-    if step.sheet or path.lower().endswith((".xlsx", ".xlsm")):
-        from ..sources.excel import read_sheet
+    sheet = _step_sheet(step, path)
+    if sheet is None:
+        return read_csv_positional(spark, path)
+    from ..sources.excel import read_sheet
 
-        headers, rows = read_sheet(path, step.sheet or step.step_id())
-        schema = ", ".join(f"c{i} string" for i in range(len(headers)))
-        norm = [[x if x != "" else None for x in r] for r in rows]
-        return spark.createDataFrame(norm, schema), headers
-    return read_csv_positional(spark, path)
+    headers, rows = read_sheet(path, sheet)
+    schema = ", ".join(f"c{i} string" for i in range(len(headers)))
+    norm = [[x if x != "" else None for x in r] for r in rows]
+    return spark.createDataFrame(norm, schema), headers
 
 
 def _col(i: int) -> Column:
@@ -336,8 +350,22 @@ def _nonempty(c: Column) -> Column:
     return c.isNotNull() & (c != "")
 
 
+def _subject(manifest: Manifest, class_type: str, id_idx: int) -> Column:
+    """The row's subject id: the id cell, kebab-class-prefixed under namespaceIris."""
+    if manifest.instances.namespace_iris:
+        return F.concat(F.lit(to_kebab_case(class_type) + "/"), _col(id_idx))
+    return _col(id_idx)
+
+
+def _step_identifier(vocab: VocabularyMap, step: ImportStep, class_type: str) -> str:
+    label = _identifier_label(vocab, step, class_type)
+    if label is None:
+        raise ValueError(f"No identifier property found for class '{class_type}'")
+    return label
+
+
 # --------------------------------------------------------------------------
-# step → triples
+# step → triples: each step is one scan and one explode
 # --------------------------------------------------------------------------
 
 
@@ -353,7 +381,10 @@ def basic_instance_outputs(
     Returns (triples, header plans, header diagnostics, class_type) so
     the violations builder (operators/violations.py) can route unknown
     headers and per-value coercion/picklist failures without a second
-    planning pass."""
+    planning pass.
+
+    Each row's parent triples and, per pivot group with any value, the
+    child's triples plus the parent→child edge come out of one explode."""
     class_type = step.instance_type or None
     if not class_type:
         from ..iri import to_pascal_case
@@ -361,11 +392,7 @@ def basic_instance_outputs(
         class_type = to_pascal_case(step.step_id())
     namespace_iris = manifest.instances.namespace_iris
     model_base = manifest.model.base_iri
-
-    override_id = next((o.column for o in step.overrides if o.map_to == "@id"), None)
-    identifier_label = vocab.get_identifier_label(class_type) or override_id
-    if identifier_label is None:
-        raise ValueError(f"No identifier property found for class '{class_type}'")
+    identifier_label = _step_identifier(vocab, step, class_type)
 
     path = str(storage.join_path(base_path, manifest.instances.path, step.path))
     df, headers = read_step_positional(spark, path, step)
@@ -375,85 +402,53 @@ def basic_instance_outputs(
     if id_plan is None:
         raise ValueError(f"Identifier column '{identifier_label}' not found in {path}")
 
-    subj = _col(id_plan.index)
-    if namespace_iris:
-        subj = F.concat(F.lit(to_kebab_case(class_type) + "/"), subj)
-    df = df.filter(_nonempty(_col(id_plan.index))).withColumn("_subj", subj)
+    df = df.filter(_nonempty(_col(id_plan.index))).withColumn(
+        "_subj", _subject(manifest, class_type, id_plan.index)
+    )
 
-    # --- plain (non-pivot) properties → struct arrays
-    prop_arrays: list[Column] = [
-        F.array(
-            F.struct(
-                F.lit("@type").alias("pred"),
-                F.lit(class_type).alias("obj"),
-                F.lit("type").alias("obj_kind"),
-            )
-        )
-    ]
+    def values(p: HeaderPlan) -> str:
+        return _header_values_sql(step, p, vocab, model_base, namespace_iris)
+
+    # --- plain (non-pivot) properties
+    arrays: list[Column] = [F.array(_triple(F.col("_subj"), "@type", class_type, "type"))]
     for p in plans:
         if p is None or p.kind == "ID" or p.pivot_group is not None:
             continue
-        prop_arrays.append(
-            _header_triples_expr(step, p, vocab, model_base, namespace_iris)
-        )
+        arrays.append(_triples_expr("_subj", p.name, values(p)))
         if p.is_label:
-            prop_arrays.append(
-                _header_triples_expr(step, p, vocab, model_base, namespace_iris, pred="label")
-            )
-
-    parent = df.select(
-        F.col("_subj").alias("subj"), F.explode(F.flatten(F.array(*prop_arrays))).alias("t")
-    ).select("subj", "t.pred", "t.obj", "t.obj_kind")
-
-    out = parent
+            arrays.append(_triples_expr("_subj", "label", values(p)))
 
     # --- R1 pivot children: one child per (row, pivot group) with any value
     for gi, pc in enumerate(step.pivot_columns or []):
         group_plans = [p for p in plans if p is not None and p.pivot_group == gi]
         if not group_plans:
             continue
-        trips = [
-            _header_triples_expr(step, p, vocab, model_base, namespace_iris)
-            for p in group_plans
-        ]
-        any_value = None
-        for p in group_plans:
-            cond = _nonempty(_col(p.index))
-            any_value = cond if any_value is None else (any_value | cond)
+        any_value = _nonempty(_col(group_plans[0].index))
+        for p in group_plans[1:]:
+            any_value = any_value | _nonempty(_col(p.index))
 
         # deterministic blank-node id: hash of parent, relationship, type and
-        # the processed pivot values in column order (SURVEY §2.8 #1)
+        # the processed pivot values in column order (SURVEY §2.8 #1),
+        # computed once per row as a column the child's triples reference
         hash_parts = [F.col("_subj"), F.lit(pc.new_relationship_property), F.lit(pc.instance_type)]
-        for p, trip in zip(group_plans, trips):
+        for p in group_plans:
             hash_parts.append(F.lit(p.name))
-            hash_parts.append(F.concat_ws(_SEP, F.transform(trip, lambda s: s.obj)))
-        child_id = F.sha2(F.concat_ws(_SEP, *hash_parts), 256)
+            hash_parts.append(F.expr(f"concat_ws({sql_str(_SEP)}, transform({values(p)}, s -> s.obj))"))
+        child = f"_child{gi}"
+        df = df.withColumn(child, F.sha2(F.concat_ws(_SEP, *hash_parts), 256))
 
-        pdf = df.filter(any_value).withColumn("_child", child_id)
-        child_arrays = [
-            F.array(
-                F.struct(
-                    F.lit("@type").alias("pred"),
-                    F.lit(pc.instance_type).alias("obj"),
-                    F.lit("type").alias("obj_kind"),
-                )
-            )
-        ] + trips
-
-        child_triples = pdf.select(
-            F.col("_child").alias("subj"),
-            F.explode(F.flatten(F.array(*child_arrays))).alias("t"),
-        ).select("subj", "t.pred", "t.obj", "t.obj_kind")
-
-        edges = pdf.select(
-            F.col("_subj").alias("subj"),
-            F.lit(pc.new_relationship_property).alias("pred"),
-            F.col("_child").alias("obj"),
-            F.lit("ref").alias("obj_kind"),
+        child_arrays = [F.array(_triple(F.col(child), "@type", pc.instance_type, "type"))]
+        child_arrays += [_triples_expr(child, p.name, values(p)) for p in group_plans]
+        child_arrays.append(
+            F.array(_triple(F.col("_subj"), pc.new_relationship_property, F.col(child), "ref"))
         )
-        out = out.unionByName(child_triples).unionByName(edges)
+        arrays.append(
+            F.when(any_value, F.flatten(F.array(*child_arrays))).otherwise(
+                F.array().cast(_TRIPLES_T)
+            )
+        )
 
-    return out, plans, diags, class_type
+    return _explode_triples(df, arrays), plans, diags, class_type
 
 
 def subclass_instance_triples(
@@ -472,11 +467,7 @@ def subclass_instance_triples(
     normalized PascalCase type; unresolved cells pass through raw.
     """
     parent_type = step.instance_type
-    namespace_iris = manifest.instances.namespace_iris
-    override_id = next((o.column for o in step.overrides if o.map_to == "@id"), None)
-    identifier_label = vocab.get_identifier_label(parent_type) or override_id
-    if identifier_label is None:
-        raise ValueError(f"No identifier property found for class '{parent_type}'")
+    identifier_label = _step_identifier(vocab, step, parent_type)
     subclass_property = step.sub_class_property
     if not subclass_property:
         raise ValueError("SubClassInstanceStep requires subClassProperty")
@@ -492,11 +483,9 @@ def subclass_instance_triples(
     except ValueError:
         raise ValueError(f"Subclass property column '{subclass_property}' not found")
 
-    subj = _col(id_idx)
-    if namespace_iris:
-        subj = F.concat(F.lit(to_kebab_case(parent_type) + "/"), subj)
-
-    df = df.filter(_nonempty(_col(id_idx)) & _nonempty(_col(sub_idx))).withColumn("_subj", subj)
+    df = df.filter(_nonempty(_col(id_idx)) & _nonempty(_col(sub_idx))).withColumn(
+        "_subj", _subject(manifest, parent_type, id_idx)
+    )
 
     # J3 broadcast resolve (processor_impl.rs:487-516): the cell matches a
     # class key's String id or original_id, then normalize().pascal() of the
@@ -509,32 +498,26 @@ def subclass_instance_triples(
 
             raw = IdOpt(key)
         resolve_rows.append((key, raw.normalize().pascal().final()))
-    lookup = spark.createDataFrame(resolve_rows, ["_sub_raw", "_sub_resolved"])
+    lookup = spark.createDataFrame(resolve_rows, "_sub_raw string, _sub_resolved string")
 
     df = df.join(F.broadcast(lookup), df[f"c{sub_idx}"] == lookup["_sub_raw"], "left")
     resolved_type = F.coalesce(F.col("_sub_resolved"), _col(sub_idx))
 
+    subj = F.col("_subj")
     arrays = [
         F.array(
-            F.struct(F.lit("@type").alias("pred"), F.lit(parent_type).alias("obj"), F.lit("type").alias("obj_kind")),
-            F.struct(F.lit("@type").alias("pred"), resolved_type.alias("obj"), F.lit("type").alias("obj_kind")),
+            _triple(subj, "@type", parent_type, "type"),
+            _triple(subj, "@type", resolved_type, "type"),
         )
     ]
     for i, h in enumerate(headers):
         if i in (id_idx, sub_idx) or h == "":
             continue
         arrays.append(
-            F.when(
-                _nonempty(_col(i)),
-                F.array(
-                    F.struct(F.lit(h).alias("pred"), _col(i).alias("obj"), F.lit("string").alias("obj_kind"))
-                ),
-            ).otherwise(F.array().cast(_TRIPLES_T))
+            F.when(_nonempty(_col(i)), F.array(_triple(subj, h, _col(i), "string")))
+            .otherwise(F.array().cast(_TRIPLES_T))
         )
-
-    return df.select(
-        F.col("_subj").alias("subj"), F.explode(F.flatten(F.array(*arrays))).alias("t")
-    ).select("subj", "t.pred", "t.obj", "t.obj_kind")
+    return _explode_triples(df, arrays)
 
 
 def properties_instance_triples(
@@ -550,9 +533,9 @@ def properties_instance_triples(
     vocabulary by original id (J2) and emits under its camelCase final
     key. Entity column: class identifier label if present, else the
     conventional "Entity ID" (see module docstring on the reference bug).
+    Each row yields its value triple and the class @type from one explode.
     """
     class_type = step.instance_type
-    namespace_iris = manifest.instances.namespace_iris
     prop_id_col = next((o.column for o in step.overrides if o.map_to == "$Property.ID"), "Property ID")
     prop_val_col = next(
         (o.column for o in step.overrides if o.map_to == "$Property.Value"), "Property Value"
@@ -573,10 +556,6 @@ def properties_instance_triples(
     pid_idx = headers.index(prop_id_col)
     pval_idx = headers.index(prop_val_col)
 
-    subj = _col(id_idx)
-    if namespace_iris:
-        subj = F.concat(F.lit(to_kebab_case(class_type) + "/"), subj)
-
     df = df.filter(
         _nonempty(_col(id_idx)) & _nonempty(_col(pid_idx)) & _nonempty(_col(pval_idx))
     )
@@ -592,21 +571,16 @@ def properties_instance_triples(
         if base and fin.startswith(base):
             fin = fin[len(base):]
         rows.append((key, fin))
-    lookup = spark.createDataFrame(rows, ["_pid_raw", "_pid_final"])
+    lookup = spark.createDataFrame(rows, "_pid_raw string, _pid_final string")
 
     df = df.join(F.broadcast(lookup), df[f"c{pid_idx}"] == lookup["_pid_raw"], "left")
     pred = F.coalesce(F.col("_pid_final"), _col(pid_idx))
 
-    triples = df.select(
-        subj.alias("subj"),
-        pred.alias("pred"),
-        _col(pval_idx).alias("obj"),
-        F.lit("string").alias("obj_kind"),
+    subj = _subject(manifest, class_type, id_idx)
+    return _explode_triples(
+        df,
+        [F.array(
+            _triple(subj, pred, _col(pval_idx), "string"),
+            _triple(subj, "@type", class_type, "type"),
+        )],
     )
-    types = df.select(
-        subj.alias("subj"),
-        F.lit("@type").alias("pred"),
-        F.lit(class_type).alias("obj"),
-        F.lit("type").alias("obj_kind"),
-    )
-    return triples.unionByName(types)

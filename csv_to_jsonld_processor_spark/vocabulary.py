@@ -356,18 +356,11 @@ class VocabularyCompiler:
 
     # -- step processing (vocabulary/processor.rs:229-414) --------------------
 
-    def _read_csv(self, step: ImportStep):
-        path = storage.join_path(self.base_path, self.manifest.model.path, step.path)
-        if step.sheet or str(path).lower().endswith((".xlsx", ".xlsm")):
-            # S2: Excel model step — driver-side sheet render (excel/mod.rs)
-            from .sources.excel import read_sheet
-
-            return read_sheet(path, step.sheet or step.step_id())
-        return _read_csv_rows(path)
-
     def _process_step(self, step: ImportStep) -> None:
         kind = next(t for t in step.types if t.endswith("VocabularyStep"))
-        headers, rows = self._read_csv(step)
+        headers, rows = _read_step_rows(
+            storage.join_path(self.base_path, self.manifest.model.path, step.path), step
+        )
 
         if self.sniff_model_files and not is_model_file(headers):
             # reference contract: warn + skip the whole step
@@ -592,6 +585,32 @@ def _read_csv_rows(path) -> tuple[list[str], list[list[str]]]:
     return headers, list(rdr)
 
 
+def _step_sheet(step: ImportStep, path) -> str | None:
+    """The workbook sheet an import step reads (S2, excel/mod.rs), or None
+    for a CSV step: a step that names a sheet, or any .xlsx/.xlsm path,
+    which reads the sheet named after the step."""
+    if step.sheet or str(path).lower().endswith((".xlsx", ".xlsm")):
+        return step.sheet or step.step_id()
+    return None
+
+
+def _read_step_rows(path, step: ImportStep) -> tuple[list[str], list[list[str]]]:
+    """(header, data rows) of a driver-read step file, CSV or sheet."""
+    sheet = _step_sheet(step, path)
+    if sheet is None:
+        return _read_csv_rows(path)
+    from .sources.excel import read_sheet
+
+    return read_sheet(path, sheet)
+
+
+def _identifier_label(vocab: VocabularyMap, step: ImportStep, class_type: str) -> str | None:
+    """The class's identifier column: its @id property's label, else the
+    step's ``@id`` override column."""
+    override = next((o.column for o in step.overrides if o.map_to == "@id"), None)
+    return vocab.get_identifier_label(class_type) or override
+
+
 def compile_vocabulary(manifest: Manifest, base_path: str | Path, strict: bool = False,
                        sniff_model_files: bool = False) -> VocabularyMap:
     return VocabularyCompiler(manifest, base_path, strict, sniff_model_files).compile()
@@ -625,8 +644,7 @@ def accumulate_picklist_one_of(
         if not step.has_type("PicklistStep"):
             continue
         class_type = step.instance_type or to_pascal_case(step.step_id())
-        override_id = next((o.column for o in step.overrides if o.map_to == "@id"), None)
-        identifier_label = vocab.get_identifier_label(class_type) or override_id
+        identifier_label = _identifier_label(vocab, step, class_type)
         if identifier_label is None:
             problems.append(f"No identifier property found for picklist class '{class_type}'")
             continue
@@ -638,12 +656,7 @@ def accumulate_picklist_one_of(
             )
             continue
         path = storage.join_path(base_path, manifest.instances.path, step.path)
-        if step.sheet or str(path).lower().endswith((".xlsx", ".xlsm")):
-            from .sources.excel import read_sheet
-
-            headers, data_rows = read_sheet(path, step.sheet or step.step_id())
-        else:
-            headers, data_rows = _read_csv_rows(path)
+        headers, data_rows = _read_step_rows(path, step)
         try:
             idx = headers.index(identifier_label)
         except ValueError:

@@ -327,6 +327,142 @@ def test_subclass_step_matches_oracle(spark, tmp_path, namespaced):
     assert not any(o in ("NoId", "NoKind") for s, p, o, k in engine)
 
 
+@pytest.mark.parametrize(
+    "model_csv",
+    ["Class ID,Class Name,Class Description\nThing,Thing,a thing\nBig Thing,Big,a big thing\n",
+     "Class ID,Class Name,Class Description\n"],
+    ids=["classes-only", "empty"],
+)
+def test_steps_over_vocabulary_without_properties(spark, tmp_path, model_csv):
+    """EAV and SubClass steps over a SubClass-only vocabulary (no
+    properties; in the empty model no classes either) resolve nothing and
+    pass their cells through raw, as the oracle does."""
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["model"]["sequence"] = [
+        {
+            "path": "Model.csv",
+            "@type": ["CSVImportStep", "SubClassVocabularyStep"],
+            "subClassOf": ["http://ex.com/terms/Thing"],
+        }
+    ]
+    manifest["instances"]["sequence"] = [
+        {
+            "path": "ThingProps.csv",
+            "@type": ["CSVImportStep", "PropertiesInstanceStep"],
+            "instanceType": "Thing",
+        },
+        {
+            "path": "ThingKinds.csv",
+            "@type": ["CSVImportStep", "SubClassInstanceStep"],
+            "instanceType": "Thing",
+            "subClassProperty": "Kind",
+            "overrides": [{"column": "Thing ID", "mapTo": "@id"}],
+        },
+    ]
+    engine, oracle = _engine_and_oracle(
+        spark, tmp_path, manifest, model_csv,
+        {
+            "ThingProps.csv": "Entity ID,Property ID,Property Value\nT1,size,big\nT2,color,red\n",
+            "ThingKinds.csv": "Thing ID,Kind,Note\nT1,Big Thing,n1\nT2,Other,\n",
+        },
+    )
+    assert engine == oracle, (
+        f"engine-only={sorted(engine - oracle)[:6]} oracle-only={sorted(oracle - engine)[:6]}"
+    )
+    assert ("thing/T1", "size", "big", "string") in engine
+    assert ("thing/T2", "@type", "Other", "type") in engine
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan of a DataFrame that has run (with AQE,
+    its final plan only)."""
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_each_step_is_one_scan(spark, tmp_path):
+    """Each instance step reads its file once for its triples — a basic
+    step's parent triples, pivot children and edges, or an EAV row's value
+    and @type, come out of one explode — and a basic step at most once for
+    its value violations, whose rules are one projection. The EAV property
+    lookup is the only broadcast."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+    from oracle_reference import oracle_triples
+
+    (tmp_path / "model").mkdir()
+    (tmp_path / "instances").mkdir()
+    (tmp_path / "model" / "Model.csv").write_text(MODEL_CSV + PIVOT_MODEL_CSV.split("\n", 1)[1])
+    (tmp_path / "instances" / "Gadgets.csv").write_text(GADGETS_CSV)
+    (tmp_path / "instances" / "Orders.csv").write_text(ORDERS_CSV)
+    (tmp_path / "instances" / "GadgetProps.csv").write_text(GADGET_PROPS_CSV)
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["sequence"] = [
+        {
+            "path": "Gadgets.csv",
+            "@type": ["CSVImportStep", "BasicInstanceStep"],
+            "instanceType": "Gadget",
+        },
+        {
+            "path": "Orders.csv",
+            "@type": ["CSVImportStep", "BasicInstanceStep"],
+            "instanceType": "Order",
+            "pivotColumns": [
+                {
+                    "instanceType": "OrderLine",
+                    "newRelationshipProperty": "hasLines",
+                    "columns": ["Qty", "has Item", "Unit Price"],
+                }
+            ],
+        },
+        {
+            "path": "GadgetProps.csv",
+            "@type": ["CSVImportStep", "PropertiesInstanceStep"],
+            "instanceType": "Gadget",
+        },
+    ]
+    m = Manifest.from_dict(manifest)
+    vocab = compile_vocabulary(m, str(tmp_path))
+    # scan nodes print their file path in full only under a longer limit,
+    # which must hold while the plans are built and run
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        triples, violations = build_instance_outputs(spark, m, vocab, str(tmp_path))
+        engine = {tuple(r) for r in triples.collect()}
+        rules = {r.rule for r in violations.collect()}
+        triples_plan, violations_plan = _final_plan(triples), _final_plan(violations)
+    finally:
+        spark.conf.set(key, old)
+    assert engine == oracle_triples(m, vocab, str(tmp_path))
+    assert {"value_validation", "picklist_validation", "header_validation"} <= rules
+
+    def scans(plan, name):
+        return sum(name in line for line in plan.splitlines() if "FileScan" in line)
+
+    for name in ("Gadgets.csv", "Orders.csv", "GadgetProps.csv"):
+        assert scans(triples_plan, name) == 1, (name, triples_plan)
+    for name in ("Gadgets.csv", "Orders.csv"):
+        assert scans(violations_plan, name) <= 1, (name, violations_plan)
+    assert triples_plan.count("BroadcastExchange") == 1, triples_plan
+
+
+def test_instances_without_steps_write_empty_document(spark, corpus, tmp_path):
+    """An instances section with no steps is a valid manifest: the run
+    writes the vocabulary and an instances.jsonld with no nodes."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["sequence"] = []
+    m = Manifest.from_dict(manifest)
+    assert m.validate() == []
+    out = tmp_path / "out"
+    outcome = Pipeline(m, corpus).run(spark, out)
+    assert outcome.ok, outcome.errors
+    assert outcome.counts == {"entities": 0, "triples": 0, "violations": 0}
+    assert json.loads((out / "instances.jsonld").read_text())["insert"] == []
+    assert (out / "vocabulary.jsonld").exists() and (out / "vocab_meta.json").exists()
+
+
 def test_violations_lenient(spark, corpus):
     """A7 + J4: unknown header, failed Integer coercion, and picklist
     membership failures route to the violations DataFrame; Decimal
