@@ -429,13 +429,14 @@ def basic_instance_outputs(
 
         # deterministic blank-node id: hash of parent, relationship, type and
         # the processed pivot values in column order (SURVEY §2.8 #1),
-        # computed once per row as a column the child's triples reference
+        # computed once per row with a child, as a column the child's
+        # triples reference
         hash_parts = [F.col("_subj"), F.lit(pc.new_relationship_property), F.lit(pc.instance_type)]
         for p in group_plans:
             hash_parts.append(F.lit(p.name))
             hash_parts.append(F.expr(f"concat_ws({sql_str(_SEP)}, transform({values(p)}, s -> s.obj))"))
         child = f"_child{gi}"
-        df = df.withColumn(child, F.sha2(F.concat_ws(_SEP, *hash_parts), 256))
+        df = df.withColumn(child, F.when(any_value, F.sha2(F.concat_ws(_SEP, *hash_parts), 256)))
 
         child_arrays = [F.array(_triple(F.col(child), "@type", pc.instance_type, "type"))]
         child_arrays += [_triples_expr(child, p.name, values(p)) for p in group_plans]
