@@ -10,9 +10,10 @@ ProcessingState (A7) re-expressed as data.
 Materialization writes ``entities`` / ``predicates`` / ``edges`` tables
 partitioned by a deterministic bucket of the subject (hash-bucketed so
 downstream joins/merges on subj are co-partitioned). Writers go through
-``write_table`` which uses Iceberg (``writeTo``) when a catalog is
-configured and falls back to partitioned parquet otherwise — this
-sandbox has no Iceberg jars, the layout is identical either way.
+``write_table``: a target containing ``/`` is a path written as
+partitioned parquet, anything else a catalog table identifier written
+with ``writeTo`` (Iceberg when such a catalog is configured); the layout
+is identical either way.
 """
 
 from __future__ import annotations
@@ -20,10 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .mentions import LINKED_SCHEMA
+
 KG_TERMS = "http://example.org/kg/terms/"
 KG_IDS = "http://example.org/kg/ids/"
 
 N_BUCKETS = 64
+
+_LINKED_COLS = {field.split(" ")[0] for field in LINKED_SCHEMA.split(", ")}
 
 
 def predicate_context(predicates: list[tuple]) -> dict[str, str]:
@@ -51,9 +56,13 @@ def entity_iri_col(cls_col: F.Column, name_col: F.Column) -> F.Column:
 def canonicalize_edges(linked: DataFrame, context: dict[str, str]) -> tuple[DataFrame, DataFrame]:
     """linked mentions → (edges, violations).
 
-    edges: (subj, pred, obj, url, sent_idx) with IRIs everywhere.
+    edges: (subj, pred, obj, url, sent_idx) with IRIs everywhere, then
+    every ``linked`` column outside LINKED_SCHEMA as is (the extraction
+    ``passthrough`` columns, e.g. ``warc_ts``; ``part_id`` in a ledgered
+    stage).
     violations: unlinked subject/object or unknown predicate surface.
     """
+    extra = [c for c in linked.columns if c not in _LINKED_COLS]
     j = linked.withColumn("pred_iri", literal_map(context)[F.col("pred_surface")])
 
     ok = (
@@ -72,6 +81,7 @@ def canonicalize_edges(linked: DataFrame, context: dict[str, str]) -> tuple[Data
             F.col("obj_mention_class").alias("obj_class"),
             "url",
             "sent_idx",
+            *extra,
         )
     )
 
@@ -182,32 +192,29 @@ def with_bucket(df: DataFrame, key: str = "subj", n: int = N_BUCKETS) -> DataFra
 
 
 def write_table(df: DataFrame, path_or_ident: str, partition_by: list[str] | None = None,
-                mode: str = "overwrite") -> None:
-    """Iceberg writeTo when a catalog identifier is given (contains a dot
-    and a catalog is configured), else partitioned parquet."""
-    spark = df.sparkSession
-    if "." in path_or_ident and not path_or_ident.startswith("/"):
-        writer = df.writeTo(path_or_ident)
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path_or_ident)
+                mode: str = "overwrite") -> int:
+    """Writes ``df`` and returns the row count observed while writing.
+    A target containing ``/`` (absolute, relative or a URI) is a path,
+    written as partitioned parquet; anything else is a table identifier,
+    written with ``writeTo``."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    if "/" in path_or_ident:
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path_or_ident)
+    elif mode == "overwrite":
+        df.writeTo(path_or_ident).createOrReplace()
+    else:
+        df.writeTo(path_or_ident).append()
+    return obs.get["n"]
 
 
 def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> dict:
     """entities/predicates/edges/violations — entities deduped from both
     edge endpoints (the reference's merge-by-@id A1 over the graph).
     Each table's row count is observed while it is written, not read back."""
-    def write(df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
-        obs = Observation()
-        write_table(df.observe(obs, F.count(F.lit(1)).alias("n")), f"{out_dir}/{name}", partition_by)
-        return obs.get["n"]
-
     subj_side = edges.select(
         F.col("subj").alias("iri"), F.col("subj_name").alias("label"),
         F.col("subj_class").alias("entity_class"),
@@ -222,8 +229,8 @@ def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> 
         .withColumnRenamed("pred", "iri")
     )
     return {
-        "edges": write(with_bucket(edges), "edges", ["bucket"]),
-        "entities": write(with_bucket(entities, "iri"), "entities", ["bucket"]),
-        "predicates": write(predicates, "predicates"),
-        "violations": write(violations, "violations"),
+        "edges": write_table(with_bucket(edges), f"{out_dir}/edges", ["bucket"]),
+        "entities": write_table(with_bucket(entities, "iri"), f"{out_dir}/entities", ["bucket"]),
+        "predicates": write_table(predicates, f"{out_dir}/predicates"),
+        "violations": write_table(violations, f"{out_dir}/violations"),
     }

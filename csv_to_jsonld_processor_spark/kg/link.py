@@ -7,7 +7,10 @@ with token-set Jaccard (array_intersect/array_union — no Python in the
 hot path) plus an exact-alias bonus; the best candidate per mention is
 taken with ``max_by`` (a single aggregation, no window shuffle).
 
-Two join strategies, selectable and benchmarked:
+``build_kg`` and the streaming jobs link inside the fused extraction
+stage against ``kb_index`` (a broadcast dict). ``link_mentions`` is the
+join-based linker, used by ``build_kg_resumable``'s ``linked`` stage and
+benchmarked by ``tools/link_skew_bench.py``; it has two strategies:
 
 - ``broadcast``: the KB alias table is dimension-sized (KBs–MBs even for
   millions of aliases after blocking-key bucketing) → ``F.broadcast``;

@@ -93,9 +93,11 @@ def extract_link_from_html(
 
     With ``idx`` (``kb_index``) the KB rides into the UDF as a broadcast
     dict and the six ``*_mention_{entity,class,score}`` columns are
-    filled in place (LINKED_SCHEMA) — the shuffle-free fast path, equal
-    to ``link_mentions(broadcast|salted_shuffle)``. With ``idx=None`` the
-    output is MENTIONS_SCHEMA for join-based linking.
+    filled in place (LINKED_SCHEMA) — the shuffle-free path every
+    ``kg/pipeline.link_pages`` caller takes, equal to
+    ``link_mentions(broadcast|salted_shuffle)``. With ``idx=None`` the
+    output is MENTIONS_SCHEMA for join-based linking (the resumable
+    pipeline's ``mentions`` stage).
 
     The binary ``html`` column is the widest in the table and Catalyst
     cannot column-prune through a mapInPandas barrier, so it crosses

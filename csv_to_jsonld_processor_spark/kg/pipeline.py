@@ -2,13 +2,17 @@
 
 pages (Iceberg/parquet) → ONE mapInPandas stage (byte-pinned text
 extraction → mention + triple extraction → entity linking against the
-broadcast KB dict; join-based strategies run it unlinked and link by
-blocked join, broadcast or salted shuffle)
+broadcast KB dict: ``link_pages``)
 → predicate canonicalization (@context literal map)
-→ SHACL-style validation → entities/predicates/edges (+violations)
-with per-partition lineage when a ledger dir is given.
+→ SHACL-style validation → entities/predicates/edges (+violations).
 With ``out_dir`` the linked relation is a lazy local checkpoint, computed
 once for every sink, so each page crosses into Python once.
+
+``link_pages`` is the one place the extraction front end (predicate
+surfaces, gazetteer, KB index) is derived from the KB and predicate
+lists; the streaming jobs and the anchor-label query call it too.
+``build_kg_resumable`` runs the same stages unfused, with join-based
+linking, as per-partition ledgered stages.
 """
 
 from __future__ import annotations
@@ -51,11 +55,30 @@ def _all_violations(canon_viol: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
+def _surfaces_and_gazetteer(
+    entities: list[tuple], predicates: list[tuple]
+) -> tuple[list[str], list[str]]:
+    """The extraction front end: predicate surface phrases and entity aliases."""
+    return [p[0] for p in predicates], [a for _c, aliases, _cls in entities for a in aliases]
+
+
+def link_pages(
+    pages: DataFrame,
+    entities: list[tuple] = ENTITIES,
+    predicates: list[tuple] = PREDICATES,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """pages → the linked relation (LINKED_SCHEMA, then ``passthrough``):
+    extract+link in ONE shuffle-free scan with the dimension-sized KB
+    broadcast as a dict (the reference's hash-map lookups)."""
+    surfaces, gazetteer = _surfaces_and_gazetteer(entities, predicates)
+    return extract_link_from_html(pages, surfaces, gazetteer, kb_index(entities), passthrough)
+
+
 def build_kg(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str | None = None,
-    link_strategy: str = "fused_broadcast",
     entities: list[tuple] = ENTITIES,
     predicates: list[tuple] = PREDICATES,
 ) -> dict:
@@ -63,18 +86,7 @@ def build_kg(
     materialized table counts."""
     if "html" not in pages.columns:
         raise ValueError(f"build_kg: pages needs an 'html' column, got {pages.columns}")
-    surfaces = [p[0] for p in predicates]
-    gazetteer = [a for _c, aliases, _cls in entities for a in aliases]
-
-    if link_strategy == "fused_broadcast":
-        # dimension-sized KB: extract+link in ONE shuffle-free scan with
-        # the KB broadcast as a dict (the reference's hash-map lookups)
-        linked = extract_link_from_html(pages, surfaces, gazetteer, kb_index(entities))
-    else:
-        mentions = extract_mentions_from_html(pages, surfaces, gazetteer)
-        kb = kb_alias_table(spark, entities)
-        linked = link_mentions(mentions, kb, "subj_mention", strategy=link_strategy)
-        linked = link_mentions(linked, kb, "obj_mention", strategy=link_strategy)
+    linked = link_pages(pages, entities, predicates)
     if out_dir:
         linked = linked.localCheckpoint(eager=False)
 
@@ -112,14 +124,12 @@ def build_kg_resumable(
     ``fail_at=(stage, k)`` injects a crash after k partitions of the
     named stage — the kill-and-resume test hook.
 
-    Output contract: identical edge set to ``build_kg(...,
-    link_strategy='broadcast')`` (pinned by
+    Output contract: identical edge set to ``build_kg`` (pinned by
     tests/test_kg_pipeline.py::test_resumable_pipeline_equals_batch).
     """
     from .lineage import run_stage
 
-    surfaces = [p[0] for p in predicates]
-    gazetteer = [a for _c, aliases, _cls in entities for a in aliases]
+    surfaces, gazetteer = _surfaces_and_gazetteer(entities, predicates)
     kb = kb_alias_table(spark, entities)
     ledger = f"{work_dir}/ledger"
 

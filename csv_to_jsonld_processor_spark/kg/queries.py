@@ -1442,14 +1442,10 @@ def kg_anchor_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; no collect, no driver loop."""
     from pyspark.sql import Window
 
-    from ..sources.pages import ENTITIES, PREDICATES, generate_pages
-    from .link import kb_index
-    from .mentions import extract_link_from_html
+    from ..sources.pages import generate_pages
+    from .pipeline import link_pages
 
-    pages = generate_pages(spark, 1000, seed=42, partitions=8)
-    surfaces = [p[0] for p in PREDICATES]
-    gazetteer = [a for _c, aliases, _cls in ENTITIES for a in aliases]
-    linked = extract_link_from_html(pages, surfaces, gazetteer, kb_index(ENTITIES))
+    linked = link_pages(generate_pages(spark, 1000, seed=42, partitions=8))
 
     pairs = linked.select(
         F.col("subj_mention_entity").alias("entity"), F.col("subj_mention").alias("surface")

@@ -148,9 +148,6 @@ class XlsxWorkbook:
 
     # --- public -----------------------------------------------------------
 
-    def sheet_names(self) -> list[str]:
-        return list(self._sheets)
-
     def sheet_rows(self, sheet_name: str) -> list[list[str]]:
         """Sheet → dense list-of-rows of rendered strings (the
         reference's get_sheet_as_csv, minus the CSV framing)."""

@@ -4,9 +4,10 @@ stream source (offset-managed micro-batches of crawled pages — the
 shape of a live crawl feed at 10^12 documents).
 
 Why this works unchanged: every stage of the construction pipeline is
-STATELESS per row — Arrow-batched extract+link (mapInPandas with the
-KB broadcast as a dict), literal-map @context canonicalization, filter
-validations.  A stateless pipeline is micro-batch-invariant, so the
+STATELESS per row — Arrow-batched extract+link (``kg/pipeline.link_pages``:
+mapInPandas with the KB broadcast as a dict), literal-map @context
+canonicalization (``kg/graph.canonicalize_edges``), filter validations.
+Both streaming jobs below call those two functions, as ``build_kg`` does.  A stateless pipeline is micro-batch-invariant, so the
 streaming run must produce the exact multiset of edges the batch run
 produces over the same corpus; the registered query pins that with the
 per-predicate count + order-free checksum aggregate (the ONE stateful
@@ -39,25 +40,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checksum import u32
-from ..sources.pages import ENTITIES, PAGES_SCHEMA, PREDICATES
-from ..kg.graph import canonicalize_edges, literal_map, predicate_context
-from ..kg.link import kb_index
-from ..kg.mentions import extract_link_from_html
+from ..sources.pages import PAGES_SCHEMA, PREDICATES
+from ..kg.graph import canonicalize_edges, predicate_context
+from ..kg.pipeline import link_pages
 from .events import run_stream_over_dir
 
 _US = "\x1f"
-
-_SURFACES = [p[0] for p in PREDICATES]
-_GAZETTEER = [a for _c, aliases, _cls in ENTITIES for a in aliases]
-_KB_IDX = kb_index(ENTITIES)
-_CTX = predicate_context(PREDICATES)
 
 
 def stream_edges(pages_stream: DataFrame) -> DataFrame:
     """The batch construction pipeline applied to a streaming pages
     DataFrame — same code path, stateless stage for stage."""
-    linked = extract_link_from_html(pages_stream, _SURFACES, _GAZETTEER, _KB_IDX)
-    edges, _viol = canonicalize_edges(linked, _CTX)
+    linked = link_pages(pages_stream)
+    edges, _viol = canonicalize_edges(linked, predicate_context(PREDICATES))
     return edges
 
 
@@ -86,25 +81,17 @@ def kg_edge_window_counts_stream(
     size.
 
     ``warc_ts`` rides through the fused UDF via its ``passthrough``
-    hook and the watermark is declared on the UDF OUTPUT (a mapInPandas
-    barrier produces new attributes, so a pre-UDF watermark would not
-    propagate). Predicate canonicalization is kg/graph.py's
-    ``literal_map`` @context lookup, applied inline
-    (``canonicalize_edges`` would drop ``warc_ts``); rows failing linking
-    or context lookup are dropped exactly as canonicalize_edges routes
-    them to violations. Drained complete-mode for the bounded
-    stream==batch test (run_stream_over_dir explains why); production
-    runs append with windows finalizing as the watermark passes them."""
+    hook and on through ``canonicalize_edges``, which carries every
+    column outside LINKED_SCHEMA; the watermark is declared on the
+    edges, downstream of the UDF (a mapInPandas barrier produces new
+    attributes, so a pre-UDF watermark would not propagate). Drained
+    complete-mode for the bounded stream==batch test
+    (run_stream_over_dir explains why); production runs append with
+    windows finalizing as the watermark passes them."""
 
     def transform(stream: DataFrame) -> DataFrame:
-        linked = extract_link_from_html(
-            stream, _SURFACES, _GAZETTEER, _KB_IDX, passthrough=("warc_ts",)
-        )
-        edges = linked.withColumn("pred", literal_map(_CTX)[F.col("pred_surface")]).where(
-            F.col("subj_mention_entity").isNotNull()
-            & F.col("obj_mention_entity").isNotNull()
-            & F.col("pred").isNotNull()
-        )
+        linked = link_pages(stream, passthrough=("warc_ts",))
+        edges, _viol = canonicalize_edges(linked, predicate_context(PREDICATES))
         return (
             edges.withWatermark("warc_ts", watermark)
             .groupBy(F.window("warc_ts", window).alias("w"), "pred")

@@ -202,22 +202,6 @@ class VocabularyMap:
         term = self.identifiers.get(class_name)
         return term.label if term else None
 
-    def find_class_key_matching(self, value: str) -> str | None:
-        """J3-style lookup: class whose String id or original_id == value
-        (instance/processor_impl.rs:487-499)."""
-        for key, term in self.classes.items():
-            if key == value:
-                return key
-        return None
-
-    def find_property_key_matching(self, value: str) -> str | None:
-        """J2: property key whose String id or original_id == value
-        (instance/processor_impl.rs:734-743)."""
-        for key in self.properties:
-            if key == value:
-                return key
-        return None
-
     def find_picklist_class_key(self, class_name: str) -> str | None:
         """update_or_insert_picklist_instance's key lookup
         (types/vocabulary.rs:578-595): the class whose raw key
@@ -320,10 +304,6 @@ class VocabularyCompiler:
         self.sniff_model_files = sniff_model_files
         self.vocab = VocabularyMap()
         self.class_properties: dict[str, list[str]] = {}
-        # raw (pre-expansion) IdOpt under which each classes/class_properties
-        # entry was first created — the reference's HashMap key (hashed by
-        # original_id, types/vocabulary.rs:61-72)
-        self.class_key_raw: dict[str, IdOpt] = {}
         self._class_prop_keys: dict[str, IdOpt] = {}
         self.warnings: list[str] = []
 
@@ -340,7 +320,7 @@ class VocabularyCompiler:
     def _find_existing_class_raw(self, class_id: IdOpt) -> IdOpt | None:
         """vocabulary.classes.keys().find(|k| k == &class_id) — full-eq scan
         (vocabulary/processor.rs:540-545)."""
-        for raw in self.class_key_raw.values():
+        for raw in self.vocab.raw_class_keys.values():
             if self._idopt_eq(raw, class_id):
                 return raw
         return None
@@ -461,7 +441,6 @@ class VocabularyCompiler:
         existing = self.vocab.classes.get(key)
         if existing is None:
             self.vocab.classes[key] = term
-            self.class_key_raw[key] = class_id
             self.vocab.raw_class_keys[key] = class_id
         else:
             existing.update_with(term)

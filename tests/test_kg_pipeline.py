@@ -56,12 +56,34 @@ def test_kg_pr_broadcast(spark, pages):
     )
 
 
+def _join_linked_edges(spark, pages, strategy):
+    """Edges through the unfused front end and the join-based linker:
+    extract_mentions_from_html → link_mentions ×2 → canonicalize_edges."""
+    from csv_to_jsonld_processor_spark.kg.graph import canonicalize_edges, predicate_context
+    from csv_to_jsonld_processor_spark.kg.link import kb_alias_table, link_mentions
+    from csv_to_jsonld_processor_spark.kg.mentions import extract_mentions_from_html
+    from csv_to_jsonld_processor_spark.sources.pages import ENTITIES, PREDICATES
+
+    surfaces = [p[0] for p in PREDICATES]
+    gazetteer = [a for _c, aliases, _cls in ENTITIES for a in aliases]
+    kb = kb_alias_table(spark, ENTITIES)
+    linked = extract_mentions_from_html(pages, surfaces, gazetteer)
+    for side in ("subj_mention", "obj_mention"):
+        linked = link_mentions(linked, kb, side, strategy=strategy)
+    return canonicalize_edges(linked, predicate_context(PREDICATES))[0]
+
+
+def _edge_rows(edges_df):
+    return sorted(tuple(r) for r in edges_df.collect())
+
+
 def test_kg_salted_shuffle_equals_broadcast(spark, pages):
+    """The salted-shuffle join linker gives build_kg's fused edges."""
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
-    a = _kg_names(build_kg(spark, pages, link_strategy="broadcast")["edges"])
-    b = _kg_names(build_kg(spark, pages, link_strategy="salted_shuffle")["edges"])
-    assert a == b
+    fused = _edge_rows(build_kg(spark, pages)["edges"])
+    assert _edge_rows(_join_linked_edges(spark, pages, "salted_shuffle")) == fused
+    assert fused
 
 
 def test_kg_fused_equals_join(spark, pages):
@@ -69,9 +91,9 @@ def test_kg_fused_equals_join(spark, pages):
     join-based linking output (same scoring, same tiebreaks)."""
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
-    a = _kg_names(build_kg(spark, pages, link_strategy="broadcast")["edges"])
-    b = _kg_names(build_kg(spark, pages, link_strategy="fused_broadcast")["edges"])
-    assert a == b
+    fused = _edge_rows(build_kg(spark, pages)["edges"])
+    assert _edge_rows(_join_linked_edges(spark, pages, "broadcast")) == fused
+    assert fused
 
 
 def test_build_kg_rejects_pages_without_html(spark, pages):
@@ -79,28 +101,41 @@ def test_build_kg_rejects_pages_without_html(spark, pages):
     KeyError from a Python worker at the first action."""
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
-    for strategy in ("fused_broadcast", "broadcast"):
-        with pytest.raises(ValueError, match="'html'"):
-            build_kg(spark, pages.drop("html"), link_strategy=strategy)
+    with pytest.raises(ValueError, match="'html'"):
+        build_kg(spark, pages.drop("html"))
 
 
 def test_materialize_and_violations(spark, pages, tmp_path):
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
-    for strategy in ("fused_broadcast", "broadcast"):
-        out = str(tmp_path / strategy)
-        counts = build_kg(spark, pages, out_dir=out, link_strategy=strategy)["counts"]
-        assert counts["edges"] > 0
-        assert counts["entities"] > 0
-        assert counts["predicates"] > 0
-        # bucketed layout on disk
-        assert any(d.startswith("bucket=") for d in os.listdir(f"{out}/edges"))
-        # entity IRIs are namespaced class/kebab-name
-        e = spark.read.parquet(f"{out}/entities").collect()
-        assert all(r.iri.startswith("http://example.org/kg/ids/") for r in e)
-        # the counts are observed during the writes: they match the tables on disk
-        on_disk = {name: spark.read.parquet(f"{out}/{name}").count() for name in counts}
-        assert counts == on_disk, strategy
+    out = str(tmp_path / "kg")
+    counts = build_kg(spark, pages, out_dir=out)["counts"]
+    assert counts["edges"] > 0
+    assert counts["entities"] > 0
+    assert counts["predicates"] > 0
+    # bucketed layout on disk
+    assert any(d.startswith("bucket=") for d in os.listdir(f"{out}/edges"))
+    # entity IRIs are namespaced class/kebab-name
+    e = spark.read.parquet(f"{out}/entities").collect()
+    assert all(r.iri.startswith("http://example.org/kg/ids/") for r in e)
+    # the counts are observed during the writes: they match the tables on disk
+    on_disk = {name: spark.read.parquet(f"{out}/{name}").count() for name in counts}
+    assert counts == on_disk
+
+
+def test_build_kg_out_dir_paths(spark, pages, tmp_path):
+    """A relative ./ path and a file:// URI are paths, not table
+    identifiers: each writes the same tables as an absolute path."""
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    want = build_kg(spark, pages, out_dir=str(tmp_path / "abs"))["counts"]
+    # relative paths resolve against the JVM's working directory
+    jvm_cwd = spark.sparkContext._jvm.java.lang.System.getProperty("user.dir")
+    rel = "./" + os.path.relpath(str(tmp_path / "rel.out"), jvm_cwd)
+    for out_dir, on_disk in ((rel, tmp_path / "rel.out"),
+                             ((tmp_path / "uri.out").as_uri(), tmp_path / "uri.out")):
+        assert build_kg(spark, pages, out_dir=out_dir)["counts"] == want, out_dir
+        assert sorted(os.listdir(on_disk)) == sorted(want), out_dir
 
 
 def test_build_kg_out_dir_job_ceiling(spark, pages, tmp_path):
@@ -145,8 +180,7 @@ def test_fused_graph_plans_have_no_join(spark, pages):
         assert "Join" not in plan, (name, plan)
 
 
-@pytest.mark.parametrize("strategy", ["fused_broadcast", "broadcast"])
-def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path, strategy):
+def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path):
     """With out_dir every sink (edges, entities, predicates, the four
     violation branches) reads one computed linked relation: each page
     row crosses into the Python stage exactly once."""
@@ -161,7 +195,7 @@ def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path, strateg
             yield batch
 
     tapped = pages.mapInPandas(tap, schema=pages.schema)
-    build_kg(spark, tapped, out_dir=str(tmp_path / "kg"), link_strategy=strategy)
+    build_kg(spark, tapped, out_dir=str(tmp_path / "kg"))
     with open(log) as f:
         crossed = sum(int(line) for line in f)
     assert crossed == pages.count()
@@ -345,7 +379,7 @@ def test_resumable_pipeline_equals_batch(spark, pages, tmp_path):
     resumed = build_kg_resumable(spark, pages, work, n_parts=8)
     assert len(completed_parts(spark, ledger, "edges")) == 8
 
-    batch = build_kg(spark, pages, link_strategy="broadcast")["edges"]
+    batch = build_kg(spark, pages)["edges"]
     cols = ["url", "sent_idx", "subj", "pred", "obj"]
     a = {tuple(r) for r in resumed["edges"].select(*cols).collect()}
     b = {tuple(r) for r in batch.select(*cols).collect()}

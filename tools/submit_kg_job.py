@@ -22,7 +22,6 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=50_000)
     ap.add_argument("--input", default="", help="existing pages parquet/Iceberg path")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--link-strategy", default="fused_broadcast")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -37,7 +36,7 @@ def main() -> None:
     else:
         pages = generate_pages(spark, args.pages, seed=42)
 
-    res = build_kg(spark, pages, out_dir=args.out, link_strategy=args.link_strategy)
+    res = build_kg(spark, pages, out_dir=args.out)
     print(json.dumps({"status": "ok", **res["counts"]}))
     spark.stop()
 
