@@ -40,8 +40,11 @@ _DATE_PATTERNS = [
 
 def sql_str(s: str) -> str:
     """SQL single-quoted literal (backslash + quote escaped — matches
-    Spark's default escapedStringLiterals=false parsing)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    Spark's default escapedStringLiterals=false parsing). ``$`` is written
+    as the escape ``\\u0024``, which the literal parser decodes after
+    Spark's variable substitution has run, so a ``${env:HOME}`` in a
+    header or delimiter reads back as written."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
 
 
 def _year_sane_sql(d: str) -> str:

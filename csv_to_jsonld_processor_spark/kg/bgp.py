@@ -49,6 +49,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 TERMS = "http://example.org/kg/terms/"
 
 
@@ -245,6 +247,7 @@ def bgp_query(
     ``([var, ...], [row_tuple, ...])``, joined (broadcast: inline data
     is always tiny) to the required bindings on the overlapping
     variables; non-overlapping VALUES variables extend the bindings.
+    Every VALUES term is a string column, like every bound term.
 
     ``bind_exprs``: SPARQL BIND with expressions — SQL expression
     strings over bound variables (vs ``binds``' constants), evaluated
@@ -267,7 +270,7 @@ def bgp_query(
         v_vars, v_rows = values
         if not v_rows:
             raise ValueError("empty VALUES block")
-        vdf = edges.sparkSession.createDataFrame(v_rows, schema=list(v_vars))
+        vdf = local_df(edges.sparkSession, v_rows, ", ".join(f"`{v}` string" for v in v_vars))
         shared = sorted(bound & set(v_vars))
         if not shared:
             raise ValueError("VALUES block shares no variable with the BGP")
@@ -1194,8 +1197,8 @@ def kg_bgp_planner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pos[repr(pat)],
             )
         )
-    return spark.createDataFrame(
-        rows, "pattern string, est_rows double, actual_rows long, order_pos int"
+    return local_df(
+        spark, rows, "pattern string, est_rows double, actual_rows long, order_pos int"
     ).orderBy("order_pos")
 
 

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .queries import _GOLDEN_EDGES, kg_webtext_edges
 
 ER_QGRAM = 3
@@ -150,7 +151,7 @@ def kg_er_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                per_entity.where(F.col("n_clusters_of_ent") == 1).count()),
         metric("n_records_rewritten", rewritten.count()),
     ]
-    return spark.createDataFrame(rows, "metric string, value long").orderBy("metric")
+    return local_df(spark, rows, "metric string, value long").orderBy("metric")
 
 
 ER_FUNNEL_SQL = f"""

@@ -22,6 +22,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 LEDGER_SCHEMA = (
     "stage string, part_id int, status string, rows_in long, rows_out long, "
     "input_hash string, ts timestamp"
@@ -112,7 +114,7 @@ def run_stage(
              f"{stage}:{p}:{n_parts}", now)
             for p in pending
         ]
-        ledger_df = spark.createDataFrame(ledger_rows, LEDGER_SCHEMA.replace("timestamp", "string"))
+        ledger_df = local_df(spark, ledger_rows, LEDGER_SCHEMA.replace("timestamp", "string"))
         ledger_df = ledger_df.withColumn("ts", F.col("ts").cast("timestamp"))
         ledger_df.write.mode("append").parquet(ledger_path)
 

@@ -23,6 +23,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .lineage import LEDGER_SCHEMA
 
 
@@ -59,8 +60,8 @@ def kg_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in rows
     ]
-    return spark.createDataFrame(
-        out, "stage string, parts_done long, ledger_rows long, rows_out long"
+    return local_df(
+        spark, out, "stage string, parts_done long, ledger_rows long, rows_out long"
     ).orderBy("stage")
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 LINK_SALT = 8
 MIN_SCORE = 0.5
 
@@ -77,7 +79,9 @@ def kb_alias_table(spark, entities: list[tuple]) -> DataFrame:
     for canonical, aliases, cls in entities:
         for alias in aliases:
             rows.append((alias, canonical, cls, alias.split()[0].lower()))
-    return spark.createDataFrame(rows, ["alias", "canonical", "entity_class", "block_key"])
+    return local_df(
+        spark, rows, "alias string, canonical string, entity_class string, block_key string"
+    )
 
 
 def _prepare_mentions(mentions: DataFrame, mention_col: str) -> DataFrame:

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_df
+
 import os as _os
 
 _GOLDEN_RECRAWLS = _os.path.join(
@@ -66,7 +68,7 @@ def subclass_closure(spark: SparkSession, pairs: list[tuple[str, str]]) -> DataF
     is tiny; the function exists so ontologies of any depth close
     correctly before being broadcast at the instance join.
     """
-    direct = spark.createDataFrame(pairs, "sub string, sup string")
+    direct = local_df(spark, pairs, "sub string, sup string")
     closure = direct.localCheckpoint(eager=True)
     frontier = closure
     for _ in range(MAX_CLOSURE_ROUNDS):

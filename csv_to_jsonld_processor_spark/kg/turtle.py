@@ -52,6 +52,7 @@ from typing import Iterator, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .rdfio import (
     GROUND_TRUTH_CTES,
     _ECHAR,
@@ -474,7 +475,8 @@ def write_turtle_lines(truth: DataFrame) -> DataFrame:
         .agg(F.concat_ws(" ; ", F.array_sort(F.collect_list("po"))).alias("body"))
         .select(F.concat_ws(" ", "st", "body", F.lit(".")).alias("line"))
     )
-    prologue = spark.createDataFrame(
+    prologue = local_df(
+        spark,
         [(f"@prefix {pfx}: <{ns}> .",) for pfx, ns in sorted(PREFIXES.items())],
         "line string",
     )

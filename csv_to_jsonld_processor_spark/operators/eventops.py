@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_tables
+from ..session import load_tables, local_df
 
 FUNNEL_STAGES = ["view", "click", "purchase"]
 FUNNEL_WINDOW = "INTERVAL 24 HOURS"  # step k must follow step k-1 within this window
@@ -55,8 +55,8 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, (stage, n) in enumerate(zip(FUNNEL_STAGES, counts)):
         conv = round(n / counts[i - 1], 6) if i > 0 and counts[i - 1] else 1.0
         rows.append((i + 1, stage, n, conv))
-    return spark.createDataFrame(
-        rows, schema="stage int, event_type string, n_users long, conv_from_prev double"
+    return local_df(
+        spark, rows, "stage int, event_type string, n_users long, conv_from_prev double"
     )
 
 
@@ -1174,7 +1174,7 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_gt = first_p.groupBy("day", "arm").agg(
         F.count(F.lit(1)).cast("long").alias("d"))
     days = spark.range(1, 31).select(F.col("id").cast("int").alias("day"))
-    arms = spark.createDataFrame([(0,), (1,)], "arm long")
+    arms = local_df(spark, [(0,), (1,)], "arm long")
     grid = (
         days.crossJoin(arms)
         .join(d_gt, ["day", "arm"], "left").na.fill({"d": 0})
@@ -1561,9 +1561,9 @@ def events_ewma_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy("event_type", "i").agg(
         F.sum("cents").cast("decimal(14,0)").alias("x")
     )
-    wdf = spark.createDataFrame(
-        _BACKTEST_WEIGHTS, "T int, i int, w string"
-    ).withColumn("w", F.col("w").cast("decimal(24,0)"))
+    wdf = local_df(spark, _BACKTEST_WEIGHTS, "T int, i int, w string").withColumn(
+        "w", F.col("w").cast("decimal(24,0)")
+    )
     weighted = daily.join(F.broadcast(wdf), "i").withColumn(
         "wx", (F.col("w") * F.col("x")).cast("decimal(38,0)")
     )
@@ -1736,7 +1736,8 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     p90 = ranked.where(F.col("cum") * 10 >= tot * 9).agg(
         F.min("delta")).first()[0]
     same_day = firsts.where(F.col("delta") == 0).count()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(tot), int(p50), int(p90), int(same_day))],
         "n_converters long, p50_days long, p90_days long, n_same_day long",
     ).withColumn(
@@ -1839,9 +1840,9 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy("event_type", "i").agg(
         F.sum("cents").cast("decimal(14,0)").alias("x")
     )
-    wdf = spark.createDataFrame(
-        [(i, str(w)) for i, w in _HOLT_W.items()], "i int, w string"
-    ).withColumn("w", F.col("w").cast("decimal(24,0)"))
+    wdf = local_df(spark, [(i, str(w)) for i, w in _HOLT_W.items()], "i int, w string").withColumn(
+        "w", F.col("w").cast("decimal(24,0)")
+    )
     agg = (
         daily.join(F.broadcast(wdf), "i")
         .withColumn("wx", (F.col("w") * F.col("x")).cast("decimal(38,0)"))
@@ -1940,9 +1941,7 @@ def events_forecast_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(T + 1):
             rows.append(("mean", T, i, "1", str(T + 1)))
         rows.append(("naive", T, T, "1", "1"))
-    wdf = spark.createDataFrame(
-        rows, "model string, T int, i int, w string, den string"
-    ).select(
+    wdf = local_df(spark, rows, "model string, T int, i int, w string, den string").select(
         "model", "T", "i",
         F.col("w").cast("decimal(24,0)").alias("w"),
         F.col("den").cast("double").alias("den"),
@@ -2058,7 +2057,8 @@ def events_seasonality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sst = ss - stot ** 2 / n
     ssw = sst - ssb
     f_stat = (ssb / (k - 1)) / (ssw / (n - k))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(n), int(k), round(f_stat, 6), bool(f_stat >= 2.53))],
         "n_days long, n_groups long, f_stat double, seasonal boolean",
     )

@@ -33,9 +33,10 @@ Scale notes: each step is one scan → narrow transforms → ONE explode of
 reference's one pass per row (processor_impl.rs) — no step is a union
 of branches that each re-read its file. No shuffle until the final
 ``dropDuplicates`` (one exchange on the triple key). Vocabulary lookups
-are plan-time constants or broadcast joins — never a shuffled join. At
-100 TB the explode fan-out is bounded by (#columns × values-per-cell),
-and AQE handles post-explode skew.
+are plan-time constants or broadcast joins of driver-built
+``LocalRelation``s (``session.local_df``) — never a shuffled join, and no
+Python worker. At 100 TB the explode fan-out is bounded by (#columns ×
+values-per-cell), and AQE handles post-explode skew.
 
 Known reference bugs NOT reproduced (documented deviations):
 - unknown headers silently desync column indices in validate_headers
@@ -56,6 +57,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..session import local_df
 from ..sources import storage
 from ..coercion import (
     coerce_boolean_sql,
@@ -339,7 +341,7 @@ def read_step_positional(
     headers, rows = read_sheet(path, sheet)
     schema = ", ".join(f"c{i} string" for i in range(len(headers)))
     norm = [[x if x != "" else None for x in r] for r in rows]
-    return spark.createDataFrame(norm, schema), headers
+    return local_df(spark, norm, schema), headers
 
 
 def _col(i: int) -> Column:
@@ -465,7 +467,9 @@ def subclass_instance_triples(
     coercion/split — its TODO at :542), and the step's own `ignore` list
     is NOT applied (the reference never consults it on this path).
     R3: the subclass cell resolves against vocabulary classes (J3) to a
-    normalized PascalCase type; unresolved cells pass through raw.
+    normalized PascalCase type; unresolved cells pass through raw. The
+    class lookup is a broadcast join against a ``LocalRelation`` built on
+    the driver, so no Python worker runs.
     """
     parent_type = step.instance_type
     identifier_label = _step_identifier(vocab, step, parent_type)
@@ -499,7 +503,7 @@ def subclass_instance_triples(
 
             raw = IdOpt(key)
         resolve_rows.append((key, raw.normalize().pascal().final()))
-    lookup = spark.createDataFrame(resolve_rows, "_sub_raw string, _sub_resolved string")
+    lookup = local_df(spark, resolve_rows, "_sub_raw string, _sub_resolved string")
 
     df = df.join(F.broadcast(lookup), df[f"c{sub_idx}"] == lookup["_sub_raw"], "left")
     resolved_type = F.coalesce(F.col("_sub_resolved"), _col(sub_idx))
@@ -535,6 +539,8 @@ def properties_instance_triples(
     key. Entity column: class identifier label if present, else the
     conventional "Entity ID" (see module docstring on the reference bug).
     Each row yields its value triple and the class @type from one explode.
+    The property lookup is a broadcast join against a ``LocalRelation``
+    built on the driver, so no Python worker runs.
     """
     class_type = step.instance_type
     prop_id_col = next((o.column for o in step.overrides if o.map_to == "$Property.ID"), "Property ID")
@@ -572,7 +578,7 @@ def properties_instance_triples(
         if base and fin.startswith(base):
             fin = fin[len(base):]
         rows.append((key, fin))
-    lookup = spark.createDataFrame(rows, "_pid_raw string, _pid_final string")
+    lookup = local_df(spark, rows, "_pid_raw string, _pid_final string")
 
     df = df.join(F.broadcast(lookup), df[f"c{pid_idx}"] == lookup["_pid_raw"], "left")
     pred = F.coalesce(F.col("_pid_final"), _col(pid_idx))

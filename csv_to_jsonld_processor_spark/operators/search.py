@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_tables
+from ..session import load_tables, local_df
 
 # ---------------------------------------------------------------------------
 # BM25 (integer-exact)
@@ -254,9 +254,7 @@ def doc_bpe_train(
         census = census.select(
             "word", F.trim(seq).alias("seq"), "cnt"
         ).localCheckpoint(eager=False)
-    trained = spark.createDataFrame(
-        merges, "round int, pair string, merged string, pair_count bigint"
-    )
+    trained = local_df(spark, merges, "round int, pair string, merged string, pair_count bigint")
     return (trained, census) if return_census else trained
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import load_tables
+from ..session import load_tables, local_df
 
 N_QUERIES = 5
 TOP_K = 10
@@ -701,9 +701,7 @@ def ann_kmeans_train(
     rows = sorted(
         (int(r.cell), int(r.pos), int(r.qs), int(r.n)) for r in last_sums
     )
-    return spark.createDataFrame(
-        rows, schema="cell int, dim_idx int, qsum long, n_members long"
-    )
+    return local_df(spark, rows, "cell int, dim_idx int, qsum long, n_members long")
 
 
 def _py_norm2(vec: list[float]) -> float:
@@ -914,7 +912,8 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_trained = _ivf_topk_from(emb, trained_cents, IVF_KM_PROBES).join(
         truth, ["query_id", "neighbor_id"]
     ).count()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (
                 n_truth,
@@ -924,7 +923,7 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(n_trained / n_truth, 6),
             )
         ],
-        schema="n_truth long, n_hit_first long, n_hit_kmeans long, "
+        "n_truth long, n_hit_first long, n_hit_kmeans long, "
         "recall_first double, recall_kmeans double",
     )
 

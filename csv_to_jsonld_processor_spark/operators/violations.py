@@ -9,7 +9,8 @@ sites as ONE violations DataFrame with schema
 
 built from two parts. What the driver knows from the plan (header
 rows, picklist setup rows, picklist accumulation failures) is one list
-and becomes one DataFrame. Each basic step adds ONE projection over its
+and becomes one ``LocalRelation`` (``session.local_df``), read with no
+Python worker. Each basic step adds ONE projection over its
 own triple output: a ``CASE`` with one branch per typed header, so the
 step's CSV is read once more, not once per rule. A header has a single
 kind, so at most one branch matches a triple. Rules mirror the
@@ -47,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..iri import expand_iri_with_base, to_kebab_case
 from ..manifest import Manifest
+from ..session import local_df
 from ..vocabulary import VocabularyMap, accumulate_picklist_one_of
 from .instance_steps import (
     HeaderDiags,
@@ -184,7 +186,9 @@ def build_instance_outputs(
     instances section with no steps gives an empty triple table. The
     violations are one DataFrame of every driver-known row, unioned
     with one rule projection per basic step, lazily evaluated like any
-    other DataFrame.
+    other DataFrame. The driver-known rows, like the EAV and SubClass
+    lookups, are a ``LocalRelation``: neither output's plan holds a
+    parallelized Python RDD, so reading them starts no Python worker.
 
     Subclass and EAV (properties) steps emit raw strings with no
     coercion in the reference — no per-value sites exist there to
@@ -220,7 +224,5 @@ def build_instance_outputs(
     triples = reduce(DataFrame.unionByName, dfs).dropDuplicates(
         ["subj", "pred", "obj", "obj_kind"]
     )
-    violations = reduce(
-        DataFrame.unionByName, checks, spark.createDataFrame(rows, VIOLATION_SCHEMA)
-    )
+    violations = reduce(DataFrame.unionByName, checks, local_df(spark, rows, VIOLATION_SCHEMA))
     return triples, violations

@@ -14,9 +14,12 @@ Two instance sink shapes:
 
 One run computes the triples, the violations and the JSON-LD nodes once
 each: all three are lazy local checkpoints, filled by the first action
-that needs them and read by every later one. The violation count is
-observed during the violations write. The single document is sorted on
-the driver, so no range-partition sampling job runs.
+that needs them and read by every later one. No count has a job of its
+own: the violation count is observed during the violations write, and
+the triple count while the nodes are built from the triples. The
+violation messages are one single-partition read of the filled
+checkpoint. The single document is sorted on the driver, so no
+range-partition sampling job runs.
 """
 
 from __future__ import annotations
@@ -194,7 +197,9 @@ class Pipeline:
             str(storage.join_path(out_dir, "violations.parquet"))
         )
         n_violations = vio_obs.get["n"]
-        vio_rows = violations.limit(10_000).collect()
+        # one job, the first 10,000 rows in partition order: a plain
+        # limit scans one partition, then more, each in a job of its own
+        vio_rows = violations.coalesce(1).limit(10_000).collect()
         warnings = [
             f"[{r.rule}] stage={r.stage} subj={r.subj} pred={r.pred}: {r.value}"
             for r in vio_rows
@@ -208,13 +213,21 @@ class Pipeline:
         if self.strict and vio_errors:
             return PipelineOutcome(vio_errors, warnings, {"violations": n_violations})
 
-        nodes = assemble_entities_json(triples).localCheckpoint(eager=False)
+        # the triples are read once, when the nodes checkpoint fills
+        tri_obs = Observation()
+        nodes = assemble_entities_json(
+            triples.observe(tri_obs, F.count(F.lit(1)).alias("n"))
+        ).localCheckpoint(eager=False)
 
         context = build_jsonld_context(
             vocab, self.manifest.model.base_iri, self.manifest.instances.base_iri
         )
 
         n_entities = nodes.count()
+        # every triple has a subject, so no node means no triple — and then
+        # AQE replaces the empty stage holding the observation, which
+        # reports nothing
+        n_triples = tri_obs.get["n"] if n_entities else 0
         if single_document and n_entities <= SINGLE_DOC_MAX_ENTITIES:
             insert = [json.loads(r.node) for r in sorted(nodes.collect(), key=lambda r: r.subj)]
             doc = {"ledger": self.manifest.ledger, "@context": context, "insert": insert}
@@ -246,7 +259,7 @@ class Pipeline:
         return PipelineOutcome(
             [],
             warnings,
-            {"entities": n_entities, "triples": triples.count(), "violations": n_violations},
+            {"entities": n_entities, "triples": n_triples, "violations": n_violations},
         )
 
     def _write_vocabulary(self, vocab: VocabularyMap, out_dir: str | Path) -> None:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_tables
+from ..session import load_tables, local_df
 
 DEC = "decimal(18,4)"
 
@@ -561,7 +561,8 @@ def orders_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("lineitem.l_shipdate in 1995..2001", int(l_agg["n"]), int(l_agg["bad_dates"])),
         ("lineitem.l_orderkey fk orders", int(l_agg["n"]), int(orphan_lines)),
     ]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(e, n, f, f == 0) for e, n, f in rows],
         "expectation string, n_checked long, n_failed long, passed boolean",
     ).orderBy("expectation")
@@ -730,7 +731,8 @@ def parts_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                .otherwise(F.lit(0)).cast("decimal(28,0)")).cast("double")
          / float(stot)).alias("top1"),
     ).first()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(n), round(gini, 6),
           round(float(shares["top10"]), 6), round(float(shares["top1"]), 6))],
         "n_parts long, gini double, top10_share double, top1_share double",

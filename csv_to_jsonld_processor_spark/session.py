@@ -16,7 +16,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# the directory holding the package, so Python workers import it
+# wherever the driver was started from
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
@@ -45,7 +49,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession with scale-oriented defaults."""
+    """Build (or reuse) a local SparkSession with scale-oriented defaults.
+
+    Python workers get the package's parent directory, then any inherited
+    ``PYTHONPATH``, on their path, so a driver that imported the package
+    through ``sys.path`` alone still runs its Python stages;
+    ``extra_conf`` may set ``spark.executorEnv.PYTHONPATH`` itself."""
     cpus = cpus or env_cpus()
     shuffle = shuffle_partitions or max(32, 2 * cpus)
     # half the machine's RAM (MemTotal), at most 16g
@@ -66,10 +75,39 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows: list, ddl_schema: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl_schema``'s column order) as a
+    DataFrame whose plan is a JVM-side ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` backs the rows with a parallelized
+    Python RDD, so every job that reads them — the broadcast of a 7-row
+    lookup included — starts Python workers to unpickle them. Here they
+    cross once, as one Arrow table the JVM keeps as a local relation:
+    no Python worker runs, and an empty ``rows`` keeps the schema. (An
+    inline ``VALUES`` text would not do: Spark's variable substitution
+    rewrites ``${...}`` inside SQL literals.)"""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl_schema)
+    arrow = to_arrow_schema(schema)
+    for r in rows:
+        if len(r) != len(arrow):
+            raise ValueError(f"row {r!r} does not have the {len(arrow)} columns of {ddl_schema!r}")
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 # Table-CATALOG memo: spark.read.parquet pays a driver-side file

@@ -94,3 +94,22 @@ def test_coercion_parity_fuzz(kind):
         if got[v] != want:
             mismatches.append((v, got[v], want))
     assert not mismatches, f"{kind}: {mismatches[:10]} ({len(mismatches)} total)"
+
+
+def test_sql_str_round_trips_through_expr():
+    """A sql_str literal reads back through F.expr exactly as written:
+    quotes and backslashes are escaped, and ``${...}`` is not rewritten by
+    Spark's variable substitution (``${env:HOME}`` would read back as the
+    driver's home directory)."""
+    from pyspark.sql import functions as F
+
+    from csv_to_jsonld_processor_spark.coercion import sql_str
+    from csv_to_jsonld_processor_spark.session import get_spark
+
+    spark = get_spark("coercion-fuzz")
+    texts = ["${env:HOME}", "${spark.app.name}", "a ${x} b $", "$$", "'", "\\", "\\$",
+             "\\u0024", "new\nline", "tab\there", "naïve 日本 ✓ 𝄞", ""]
+    row = spark.range(1).select(
+        *(F.expr(sql_str(t)).alias(f"c{i}") for i, t in enumerate(texts))
+    ).first()
+    assert list(row) == texts

@@ -274,6 +274,44 @@ def test_no_forced_broadcast_of_scaling_tables():
     assert not offenders, "forced broadcast of unfiltered scaling table:\n" + "\n".join(offenders)
 
 
+# module:function → why it may build a DataFrame from driver data itself
+DRIVER_TABLE_EXCEPTIONS = {
+    "session:local_df": "the helper every driver-side table goes through",
+}
+
+
+def test_driver_tables_go_through_local_df():
+    """No package module calls ``createDataFrame`` or ``parallelize`` on
+    its own: a driver list becomes a DataFrame through
+    ``session.local_df``, a JVM-side LocalRelation, never a parallelized
+    Python RDD whose every read starts Python workers. An exception is
+    listed in DRIVER_TABLE_EXCEPTIONS by ``module:function``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "csv_to_jsonld_processor_spark"
+    found = set()
+    for py in sorted(pkg.rglob("*.py")):
+        module = ".".join(py.relative_to(pkg).with_suffix("").parts)
+
+        def visit(node, func):
+            for child in ast.iter_child_nodes(node):
+                inner = child.name if isinstance(
+                    child, (ast.FunctionDef, ast.AsyncFunctionDef)) else func
+                if (isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute)
+                        and child.func.attr in ("createDataFrame", "parallelize")):
+                    found.add((f"{module}:{func}", child.lineno))
+                visit(child, inner)
+
+        visit(ast.parse(py.read_text()), "<module>")
+    offenders = sorted(f"{site} (line {line})" for site, line in found
+                       if site not in DRIVER_TABLE_EXCEPTIONS)
+    assert not offenders, "driver list turned into a DataFrame outside local_df:\n" + "\n".join(
+        offenders
+    )
+    assert {site for site, _ in found} == set(DRIVER_TABLE_EXCEPTIONS), found
+
+
 def test_q5_no_broadcast_hint_on_scaling_tables(spark):
     """q5's analyzed plan must carry broadcast hints only on the
     region-filtered nation dim — customer/supplier join strategy is

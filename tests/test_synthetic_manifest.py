@@ -616,10 +616,12 @@ def test_ndjson_mode_matches_single_document(both_modes):
 
 
 def test_pipeline_run_job_ceiling(both_modes):
-    """Triples, violations and nodes are each computed once per run: a
-    recompute of any of them brings the job count over the ceiling."""
+    """Triples, violations and nodes are each computed once per run, and no
+    count or driver read runs a job of its own: a recompute of any of them,
+    or a job-per-partition limit, brings the job count over the ceiling
+    (7 on this corpus in both modes)."""
     jobs = {mode: n for mode, (_, _, n) in both_modes.items()}
-    assert all(n <= 12 for n in jobs.values()), jobs
+    assert all(n <= 7 for n in jobs.values()), jobs
 
 
 def test_violation_count_is_exact_past_10k(spark, corpus, tmp_path):
@@ -676,3 +678,75 @@ def test_eav_missing_property_column_names_it(spark, corpus, tmp_path):
     vocab = compile_vocabulary(m, str(d))
     with pytest.raises(ValueError, match="'Property ID' not found in .*GadgetProps.csv"):
         build_instance_outputs(spark, m, vocab, str(d))
+
+
+@pytest.mark.parametrize("namespaced", [True, False], ids=["namespaced", "plain"])
+def test_variable_syntax_in_header_matches_oracle(spark, tmp_path, namespaced):
+    """A header that reads like a Spark variable, ``Gadget ${env:HOME}``,
+    stays the predicate as written: the driver's environment does not leak
+    into the triples."""
+    manifest = json.loads(json.dumps(MANIFEST).replace("Gadget Name", "Gadget ${env:HOME}"))
+    manifest["instances"]["namespaceIris"] = namespaced
+    engine, oracle = _engine_and_oracle(
+        spark, tmp_path, manifest, MODEL_CSV.replace("Gadget Name", "Gadget ${env:HOME}"),
+        {"Colors.csv": COLORS_CSV,
+         "Gadgets.csv": GADGETS_CSV.replace("Gadget Name", "Gadget ${env:HOME}")},
+    )
+    assert engine == oracle, (
+        f"engine-only={sorted(engine - oracle)[:6]} oracle-only={sorted(oracle - engine)[:6]}"
+    )
+    g1 = "gadget/G1" if namespaced else "G1"
+    assert (g1, "Gadget ${env:HOME}", "Widget", "string") in engine
+
+
+@pytest.mark.parametrize("namespaced", [True, False], ids=["namespaced", "plain"])
+def test_instance_outputs_hold_no_python_rdd(spark, tmp_path, namespaced):
+    """The driver-built tables of the instance phase (the EAV and SubClass
+    lookups, the driver-known violation rows) are LocalRelations: neither
+    output's optimized plan scans a parallelized Python list, so reading
+    them starts no Python worker."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+
+    manifest = json.loads(json.dumps(MANIFEST))
+    manifest["instances"]["namespaceIris"] = namespaced
+    manifest["instances"]["sequence"] += [
+        {
+            "path": "GadgetProps.csv",
+            "@type": ["CSVImportStep", "PropertiesInstanceStep"],
+            "instanceType": "Gadget",
+        },
+        {
+            "path": "GadgetKinds.csv",
+            "@type": ["CSVImportStep", "SubClassInstanceStep"],
+            "instanceType": "Gadget",
+            "subClassProperty": "Kind",
+        },
+        # a picklist class the vocabulary lacks: one picklist_accumulation row
+        {
+            "path": "Shapes.csv",
+            "@type": ["CSVImportStep", "PicklistStep"],
+            "instanceType": "Shape",
+            "overrides": [{"column": "Shape ID", "mapTo": "@id"}],
+        },
+    ]
+    (tmp_path / "model").mkdir()
+    (tmp_path / "instances").mkdir()
+    (tmp_path / "model" / "Model.csv").write_text(
+        MODEL_CSV + SUBCLASS_MODEL_CSV.splitlines()[-1] + "\n"
+    )
+    for name, text in {"Colors.csv": COLORS_CSV, "Gadgets.csv": GADGETS_CSV,
+                       "GadgetProps.csv": GADGET_PROPS_CSV, "GadgetKinds.csv": GADGET_KINDS_CSV,
+                       "Shapes.csv": "Shape ID\ns1\n"}.items():
+        (tmp_path / "instances" / name).write_text(text)
+    m = Manifest.from_dict(manifest)
+    vocab = compile_vocabulary(m, str(tmp_path))
+    triples, violations = build_instance_outputs(spark, m, vocab, str(tmp_path))
+
+    for df in (triples, violations):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, plan
+        assert "LocalRelation" in plan, plan
+    rules = {r.rule for r in violations.collect()}
+    assert {"picklist_accumulation", "picklist_validation", "header_validation"} <= rules
+    kinds = {(p, o) for s, p, o, k in triples.collect() if p == "@type"}
+    assert ("@type", "PocketGadget") in kinds and ("@type", "Shape") in kinds
