@@ -9,11 +9,9 @@ ProcessingState (A7) re-expressed as data.
 
 Materialization writes ``entities`` / ``predicates`` / ``edges`` tables
 partitioned by a deterministic bucket of the subject (hash-bucketed so
-downstream joins/merges on subj are co-partitioned). Writers go through
-``write_table``: a target containing ``/`` is a path written as
-partitioned parquet, anything else a catalog table identifier written
-with ``writeTo`` (Iceberg when such a catalog is configured); the layout
-is identical either way.
+downstream joins/merges on subj are co-partitioned). The four tables
+are written by ``write_table`` as partitioned parquet paths under the
+output directory.
 """
 
 from __future__ import annotations
@@ -191,23 +189,14 @@ def with_bucket(df: DataFrame, key: str = "subj", n: int = N_BUCKETS) -> DataFra
     return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int"))
 
 
-def write_table(df: DataFrame, path_or_ident: str, partition_by: list[str] | None = None,
-                mode: str = "overwrite") -> int:
-    """Writes ``df`` and returns the row count observed while writing.
-    A target containing ``/`` (absolute, relative or a URI) is a path,
-    written as partitioned parquet; anything else is a table identifier,
-    written with ``writeTo``."""
+def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+    """Overwrites ``path`` with ``df`` as parquet, partitioned by
+    ``partition_by``, and returns the row count observed while writing."""
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    if "/" in path_or_ident:
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path_or_ident)
-    elif mode == "overwrite":
-        df.writeTo(path_or_ident).createOrReplace()
-    else:
-        df.writeTo(path_or_ident).append()
+    w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
     return obs.get["n"]
 
 

@@ -104,11 +104,11 @@ def link_mentions(
     kb: DataFrame,
     mention_col: str,
     strategy: str = "broadcast",
-    min_score: float = 0.5,
     salt: int = LINK_SALT,
 ) -> DataFrame:
     """Adds ``<mention_col>_entity`` / ``<mention_col>_class`` /
-    ``<mention_col>_score`` (null when no candidate clears min_score)."""
+    ``<mention_col>_score`` (entity and class are null when no candidate
+    clears ``MIN_SCORE``, the threshold ``resolve_mention`` uses)."""
     m = _prepare_mentions(mentions, mention_col)
     kbp = kb.withColumn("_alias_tokens", F.split(F.lower(F.col("alias")), " "))
 
@@ -147,10 +147,10 @@ def link_mentions(
         )
         .select(
             *group_cols,
-            F.when(F.col("_best.score") >= min_score, F.col("_best.entity")).alias(
+            F.when(F.col("_best.score") >= MIN_SCORE, F.col("_best.entity")).alias(
                 f"{mention_col}_entity"
             ),
-            F.when(F.col("_best.score") >= min_score, F.col("_best.cls")).alias(
+            F.when(F.col("_best.score") >= MIN_SCORE, F.col("_best.cls")).alias(
                 f"{mention_col}_class"
             ),
             F.col("_best.score").alias(f"{mention_col}_score"),

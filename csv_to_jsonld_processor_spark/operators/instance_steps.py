@@ -282,7 +282,7 @@ def csv_headers(spark: SparkSession, path: str) -> list[str]:
     import csv as _csv
     import io
 
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path):
+    if storage.is_uri(path):
         first = spark.read.text(path).limit(1).collect()
         line = first[0][0] if first else ""
         header = next(_csv.reader(io.StringIO(line.lstrip("\ufeff"))), None)

@@ -2,10 +2,16 @@
 
 The lake-format feature the sandbox can't install (Iceberg/Delta),
 re-expressed with the same commit discipline this repo already proved
-for streaming ingest (streaming/ingest.py): every commit writes a FULL
-new generation directory ``snap-<id>`` (ordered integer ids), then
-atomically flips a tiny ``CURRENT`` pointer file (os.replace — POSIX
-atomic rename). Invariants:
+for streaming ingest (streaming/ingest.py): every commit writes a new
+generation directory ``snap-<id>`` (ordered integer ids), then
+atomically flips a tiny ``CURRENT`` (or branch ``REF-*``) pointer file
+(os.replace — POSIX atomic rename). Every generation writer — full
+data, branch, merge-on-read overlay, schema evolution, append — goes
+through the one commit path ``_commit``: the id is claimed under the
+commit lock (so no two writers ever share one), the data is written
+outside it, and every pointer write (generation pointers, the CAS
+check, the flip; rollback and fast-forward too) runs under it through
+the one pointer writer ``_write_ptr``. Invariants:
 
 - A reader never sees a half-written table: it resolves CURRENT once,
   then reads only that immutable directory (snapshot isolation — a
@@ -27,6 +33,7 @@ INTO analogue, same shape as operators/upsert.py).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -67,12 +74,61 @@ def _snap_dir(table_dir: str, snap_id: int) -> str:
     return os.path.join(table_dir, f"snap-{snap_id:06d}")
 
 
-def current_snapshot_id(table_dir: str) -> int | None:
-    ptr = os.path.join(table_dir, "CURRENT")
-    if not os.path.exists(ptr):
+# --- pointer files ------------------------------------------------------------
+
+
+def _write_ptr(path: str, obj) -> None:
+    """Atomically replace ``path`` with ``obj`` as JSON: write a temp
+    file, then os.replace (POSIX-atomic rename).  The one writer of
+    every pointer file (CURRENT, REF-*, BASE, _parent, RESERVED-*),
+    whose content is the bare decimal id ``json.dumps(int)`` produces,
+    and of every JSON sidecar except the generation manifest."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _read_ptr(path: str) -> int | None:
+    """The snapshot id a pointer file names; None if there is no such
+    file.  Unparseable content raises ValueError."""
+    try:
+        with open(path) as f:
+            text = f.read()
+    except FileNotFoundError:
         return None
-    with open(ptr) as f:
-        return int(f.read().strip())
+    return int(text.strip().strip('"'))
+
+
+def _read_json(path: str):
+    with open(path) as f:
+        return json.load(f)
+
+
+def _ref_path(table_dir: str, ref: str) -> str:
+    if ref == "CURRENT":
+        return os.path.join(table_dir, "CURRENT")
+    if not re.match(r"^[A-Za-z0-9_-]+$", ref):
+        raise ValueError(f"bad ref name {ref!r}")
+    return os.path.join(table_dir, f"REF-{ref}")
+
+
+def ref_snapshot_id(table_dir: str, ref: str) -> int | None:
+    return _read_ptr(_ref_path(table_dir, ref))
+
+
+def current_snapshot_id(table_dir: str) -> int | None:
+    return ref_snapshot_id(table_dir, "CURRENT")
+
+
+def _gen_ids(table_dir: str) -> list[int]:
+    """Every generation id on disk — committed, orphaned, reserved or
+    on a branch."""
+    return [
+        int(m.group(1))
+        for name in (os.listdir(table_dir) if os.path.isdir(table_dir) else [])
+        if (m := _SNAP_RE.match(name))
+    ]
 
 
 def snapshot_ids(table_dir: str) -> list[int]:
@@ -84,12 +140,9 @@ def snapshot_ids(table_dir: str) -> list[int]:
     if cur is None:
         return []
     reserved = _reserved_ids(table_dir)
-    out = []
-    for name in os.listdir(table_dir):
-        m = _SNAP_RE.match(name)
-        if m and int(m.group(1)) <= cur and int(m.group(1)) not in reserved:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return sorted(
+        sid for sid in _gen_ids(table_dir) if sid <= cur and sid not in reserved
+    )
 
 
 def read_snapshot(
@@ -141,10 +194,11 @@ def _all_ref_ids(table_dir: str) -> set[int]:
     for f in os.listdir(table_dir) if os.path.isdir(table_dir) else []:
         if f == "CURRENT" or f.startswith("REF-"):
             try:
-                with open(os.path.join(table_dir, f)) as fh:
-                    out.add(int(fh.read().strip()))
+                sid = _read_ptr(os.path.join(table_dir, f))
             except ValueError:
-                pass
+                continue  # a ref it cannot parse is skipped
+            if sid is not None:
+                out.add(sid)
     return out
 
 
@@ -156,11 +210,7 @@ def _next_snapshot_id(table_dir: str) -> int:
     main commit after a branch commit can never collide with it."""
     # RAW directory scan — snapshot_ids() hides ids above CURRENT,
     # which is exactly where branch generations live
-    ids = [
-        int(m.group(1))
-        for name in (os.listdir(table_dir) if os.path.isdir(table_dir) else [])
-        if (m := _SNAP_RE.match(name))
-    ]
+    ids = _gen_ids(table_dir)
     if not ids:
         return 0
     top = max(ids)
@@ -228,6 +278,76 @@ class _FlipLock:
             pass
 
 
+def _commit(table_dir: str, write, ref: str = "CURRENT",
+            expected_parent: int | None = None) -> int:
+    """The one commit path of the table layer; returns the new
+    snapshot id.  Claims a generation id under the lock, runs
+    ``write(snap_dir)`` outside it (the expensive data write), then
+    under the lock runs the compare-and-swap check, writes the
+    generation's pointers — the ``{name: id}`` dict ``write`` returns
+    (a MoR overlay's BASE, an evolution chain's _parent) — drops the
+    RESERVED marker and flips ``ref``.  Claiming under the lock is what
+    keeps any two writers off one id.
+
+    Plain writers (``expected_parent=None``) take ``_next_snapshot_id``
+    and claim it with a mkdir; exist_ok, so a single writer's retry
+    overwrites its own crash orphan under the SAME id.  Concurrent
+    plain+plain writers stay unsupported — orphan reuse is
+    single-writer by nature.  CAS writers run concurrently, so they
+    never reuse an orphan: they take max+1 and write a RESERVED marker
+    — a losing writer's generation may end up below a later winner's
+    pointer, and only the marker keeps it invisible to the read API
+    and collectable by ``vacuum_orphans``."""
+    ptr = _ref_path(table_dir, ref)
+    os.makedirs(table_dir, exist_ok=True)
+    with _FlipLock(table_dir):
+        if expected_parent is None:
+            new_id = _next_snapshot_id(table_dir)
+            os.makedirs(_snap_dir(table_dir, new_id), exist_ok=True)
+        else:
+            new_id = max(_gen_ids(table_dir), default=-1) + 1
+            os.makedirs(_snap_dir(table_dir, new_id))
+            _write_ptr(_reserved_path(table_dir, new_id), new_id)
+    d = _snap_dir(table_dir, new_id)
+    gen_ptrs = write(d) or {}
+    with _FlipLock(table_dir):
+        if expected_parent is not None:
+            cur = _read_ptr(ptr)
+            if cur != expected_parent:
+                # marker STAYS: the conflicted generation remains
+                # invisible to readers and is vacuum_orphans' garbage
+                # wherever the pointer moves next
+                raise CommitConflict(
+                    f"{ref} moved to {cur} (expected {expected_parent}); "
+                    "re-read and retry"
+                )
+        for name, sid in gen_ptrs.items():
+            _write_ptr(os.path.join(d, name), sid)
+        # drop the marker BEFORE the flip: a crash in between leaves an
+        # unmarked orphan ABOVE CURRENT (new_id > expected_parent = cur
+        # while the lock is held) — exactly the standing crash-window
+        # semantics; a marker surviving past the flip would hide a
+        # committed CURRENT instead
+        try:
+            os.unlink(_reserved_path(table_dir, new_id))
+        except FileNotFoundError:
+            pass
+        _write_ptr(ptr, new_id)
+    return new_id
+
+
+def _data_writer(df: DataFrame):
+    """``_commit`` callback for a full data generation."""
+
+    def write(d: str) -> None:
+        df.write.mode("overwrite").parquet(d)
+        # manifest belongs to the generation: written before the flip,
+        # so a crash leaves it orphaned along with the data it describes
+        _write_manifest(d)
+
+    return write
+
+
 def commit_snapshot(
     spark: SparkSession, df: DataFrame, table_dir: str,
     expected_parent: int | None = None,
@@ -243,70 +363,7 @@ def commit_snapshot(
     and retries. The check-and-flip pair runs under a microsecond lock
     so two CAS writers can't interleave between check and rename; the
     expensive data write stays outside the lock."""
-    os.makedirs(table_dir, exist_ok=True)
-    if expected_parent is None:
-        # allocate under the same lock CAS reservations use so a plain
-        # commit can't read the directory listing mid-reservation and
-        # pick a colliding id; the mkdir claims the id before the lock
-        # drops (exist_ok: the single-writer orphan-reuse case
-        # overwrites its own crash leftover under the SAME id).
-        # Concurrent plain+plain writers stay unsupported — orphan
-        # reuse is single-writer by nature.
-        with _FlipLock(table_dir):
-            new_id = _next_snapshot_id(table_dir)
-            os.makedirs(_snap_dir(table_dir, new_id), exist_ok=True)
-    else:
-        # CAS writers run concurrently, so id allocation must be raced-
-        # proof too: reserve max+1 with a mkdir under the lock (never
-        # the orphan-reuse rule, which is single-writer by nature), and
-        # write an explicit RESERVED marker — a losing writer's
-        # generation may end up below a later winner's CURRENT, and
-        # only the marker keeps it invisible to the read API and
-        # collectable by vacuum_orphans
-        with _FlipLock(table_dir):
-            ids = [
-                int(m.group(1))
-                for name in os.listdir(table_dir)
-                if (m := _SNAP_RE.match(name))
-            ]
-            new_id = (max(ids) + 1) if ids else 0
-            os.makedirs(_snap_dir(table_dir, new_id))
-            with open(_reserved_path(table_dir, new_id), "w") as f:
-                f.write(str(new_id))
-    df.write.mode("overwrite").parquet(_snap_dir(table_dir, new_id))
-    # manifest belongs to the generation: written before the flip, so a
-    # crash leaves it orphaned along with the data it describes
-    _write_manifest(_snap_dir(table_dir, new_id))
-    if expected_parent is None:
-        tmp = os.path.join(table_dir, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(new_id))
-        os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-        return new_id
-    with _FlipLock(table_dir):
-        cur = current_snapshot_id(table_dir)
-        if cur != expected_parent:
-            # marker STAYS: the conflicted generation remains invisible
-            # to readers and is vacuum_orphans' garbage wherever
-            # CURRENT moves next
-            raise CommitConflict(
-                f"CURRENT moved to {cur} (expected {expected_parent}); "
-                "re-read and retry"
-            )
-        # drop the marker BEFORE the flip: a crash in between leaves an
-        # unmarked orphan ABOVE CURRENT (new_id > expected_parent = cur
-        # while the lock is held) — exactly the standing crash-window
-        # semantics; a marker surviving past the flip would hide a
-        # committed CURRENT instead
-        try:
-            os.unlink(_reserved_path(table_dir, new_id))
-        except FileNotFoundError:
-            pass
-        tmp = os.path.join(table_dir, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(new_id))
-        os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+    return _commit(table_dir, _data_writer(df), expected_parent=expected_parent)
 
 
 def _write_manifest(snap_dir: str) -> dict:
@@ -318,7 +375,6 @@ def _write_manifest(snap_dir: str) -> dict:
     directory listing) is what makes a pinned-snapshot read O(matching
     files)."""
     import glob
-    import json
 
     import pyarrow.parquet as pq
 
@@ -363,8 +419,6 @@ def read_snapshot_pruned(
     Returns (df, files_read, files_total). Semantically identical to
     ``read_snapshot(...).where(lo <= col <= hi)``; the difference is
     the skipped files never reach Spark's file index."""
-    import json
-
     cur = current_snapshot_id(table_dir)
     if cur is None:
         raise ValueError("empty table")
@@ -372,8 +426,7 @@ def read_snapshot_pruned(
     if sid > cur or sid < 0:
         raise ValueError(f"snapshot {sid} not committed (CURRENT={cur})")
     d = _snap_dir(table_dir, sid)
-    with open(os.path.join(d, "_manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _read_json(os.path.join(d, "_manifest.json"))
     keep = []
     total = 0
     for fname, cols in manifest["files"].items():
@@ -421,8 +474,6 @@ def build_bloom_index(spark: SparkSession, table_dir: str, col: str,
     distributed pass — rows never leave executors; only the per-file
     deduplicated bit positions shuffle. Returns the number of files
     indexed."""
-    import json
-
     cur = current_snapshot_id(table_dir)
     sid = cur if snapshot_id is None else snapshot_id
     d = _snap_dir(table_dir, sid)
@@ -437,10 +488,7 @@ def build_bloom_index(spark: SparkSession, table_dir: str, col: str,
         .collect()
     )
     index = {r["_f"]: r["_bits"] for r in bits}
-    tmp = os.path.join(d, f"_bloom_{col}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(index, f)
-    os.replace(tmp, os.path.join(d, f"_bloom_{col}.json"))
+    _write_ptr(os.path.join(d, f"_bloom_{col}.json"), index)
     return len(index)
 
 
@@ -454,8 +502,6 @@ def read_point_lookup(
     was set by the build pass). Returns (df, files_read, files_total).
     Files the sidecar doesn't know are always read — pruning must
     never be lossy."""
-    import json
-
     cur = current_snapshot_id(table_dir)
     sid = cur if snapshot_id is None else snapshot_id
     d = _snap_dir(table_dir, sid)
@@ -467,8 +513,7 @@ def read_point_lookup(
     if not os.path.exists(bloom_p):
         df = spark.read.parquet(d)
         return df.where(F.col(col) == value), len(data_files), len(data_files)
-    with open(bloom_p) as f:
-        index = json.load(f)
+    index = _read_json(bloom_p)
     probe = [
         r[0] for r in spark.range(1)
         .select(F.explode(_bloom_positions(F.lit(value))))
@@ -509,13 +554,10 @@ def _ancestor_ids(table_dir: str, snap_id: int) -> set[int]:
         sid = frontier.pop()
         d = _snap_dir(table_dir, sid)
         for ptr in ("BASE", "_parent"):
-            p = os.path.join(d, ptr)
-            if os.path.exists(p):
-                with open(p) as f:
-                    tgt = int(f.read().strip().strip('"'))
-                if tgt not in out:
-                    out.add(tgt)
-                    frontier.append(tgt)
+            tgt = _read_ptr(os.path.join(d, ptr))
+            if tgt is not None and tgt not in out:
+                out.add(tgt)
+                frontier.append(tgt)
     return out
 
 
@@ -559,13 +601,10 @@ def vacuum_orphans(table_dir: str) -> list[int]:
     for ref in _all_ref_ids(table_dir):
         reachable.add(ref)
         reachable |= _ancestor_ids(table_dir, ref)
-    victims = []
-    for name in os.listdir(table_dir):
-        m = _SNAP_RE.match(name)
-        if m:
-            sid = int(m.group(1))
-            if (sid > cur or sid in reserved) and sid not in reachable:
-                victims.append(sid)
+    victims = [
+        sid for sid in _gen_ids(table_dir)
+        if (sid > cur or sid in reserved) and sid not in reachable
+    ]
     for sid in victims:
         shutil.rmtree(_snap_dir(table_dir, sid))
         try:
@@ -592,11 +631,23 @@ def _read_data_with_pos(spark: SparkSession, data_dir: str) -> DataFrame:
 def _overlay_info(table_dir: str, snap_id: int) -> tuple[int, str] | None:
     """(base_snapshot_id, dv_path) if ``snap_id`` is a DV overlay."""
     d = _snap_dir(table_dir, snap_id)
-    base_file = os.path.join(d, "BASE")
-    if not os.path.exists(base_file):
-        return None
-    with open(base_file) as f:
-        return int(f.read().strip()), os.path.join(d, "dv")
+    base_id = _read_ptr(os.path.join(d, "BASE"))
+    return None if base_id is None else (base_id, os.path.join(d, "dv"))
+
+
+def _overlay_writer(base_id: int, tombs: DataFrame, ins: DataFrame | None):
+    """``_commit`` callback for a MoR overlay generation: the deletion
+    vector and the optional insert-delta, written in parallel; BASE
+    names the shared data snapshot."""
+
+    def write(d: str) -> dict[str, int]:
+        writes = [(tombs, os.path.join(d, "dv"))]
+        if ins is not None:
+            writes.append((ins, os.path.join(d, "ins")))
+        _parallel_parquet_writes(*writes)
+        return {"BASE": base_id}
+
+    return write
 
 
 def delete_rows_mor(spark: SparkSession, table_dir: str, predicate: str) -> int:
@@ -634,24 +685,8 @@ def delete_rows_mor(spark: SparkSession, table_dir: str, predicate: str) -> int:
     # an update's insert-delta has no base coordinates — deleting from
     # it means carrying forward only its surviving rows
     old_ins = _overlay_ins(spark, table_dir, cur)
-
-    new_id = _next_snapshot_id(table_dir)
-    d = _snap_dir(table_dir, new_id)
-    writes = [(all_tombs, os.path.join(d, "dv"))]
-    if old_ins is not None:
-        writes.append(
-            (old_ins.where(f"NOT ({predicate})"), os.path.join(d, "ins"))
-        )
-    _parallel_parquet_writes(*writes)
-    tmpb = os.path.join(d, "BASE.tmp")
-    with open(tmpb, "w") as f:
-        f.write(str(base_id))
-    os.replace(tmpb, os.path.join(d, "BASE"))
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+    ins = None if old_ins is None else old_ins.where(f"NOT ({predicate})")
+    return _commit(table_dir, _overlay_writer(base_id, all_tombs, ins))
 
 
 def read_snapshot_mor(
@@ -717,20 +752,7 @@ def update_rows_mor(
         updated = updated.unionByName(
             apply_set(old_ins.where(predicate))
         ).unionByName(old_ins.where(f"NOT ({predicate})"))
-    new_id = _next_snapshot_id(table_dir)
-    d = _snap_dir(table_dir, new_id)
-    _parallel_parquet_writes(
-        (all_tombs, os.path.join(d, "dv")), (updated, os.path.join(d, "ins"))
-    )
-    tmpb = os.path.join(d, "BASE.tmp")
-    with open(tmpb, "w") as f:
-        f.write(str(base_id))
-    os.replace(tmpb, os.path.join(d, "BASE"))
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+    return _commit(table_dir, _overlay_writer(base_id, all_tombs, updated))
 
 
 def _overlay_ins(spark: SparkSession, table_dir: str, snap_id: int):
@@ -907,22 +929,6 @@ ORDER BY segment
 
 # --- branch refs + write-audit-publish ---------------------------------------
 
-def _ref_path(table_dir: str, ref: str) -> str:
-    if ref == "CURRENT":
-        return os.path.join(table_dir, "CURRENT")
-    if not re.match(r"^[A-Za-z0-9_-]+$", ref):
-        raise ValueError(f"bad ref name {ref!r}")
-    return os.path.join(table_dir, f"REF-{ref}")
-
-
-def ref_snapshot_id(table_dir: str, ref: str) -> int | None:
-    p = _ref_path(table_dir, ref)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
-
-
 def commit_to_ref(spark: SparkSession, df: DataFrame, table_dir: str,
                   ref: str) -> int:
     """Commit a new snapshot and flip a NAMED ref instead of CURRENT —
@@ -930,20 +936,7 @@ def commit_to_ref(spark: SparkSession, df: DataFrame, table_dir: str,
     untouched while the branch accumulates and gets audited.  Snapshot
     ids are global (max over all generations + 1), so branch and main
     histories interleave in one ordered id space like Iceberg's."""
-    os.makedirs(table_dir, exist_ok=True)
-    # same locked allocate-and-claim as plain commits, so a branch
-    # write can't collide with a concurrent CAS reservation
-    with _FlipLock(table_dir):
-        new_id = _next_snapshot_id(table_dir)
-        os.makedirs(_snap_dir(table_dir, new_id), exist_ok=True)
-    df.write.mode("overwrite").parquet(_snap_dir(table_dir, new_id))
-    _write_manifest(_snap_dir(table_dir, new_id))
-    p = _ref_path(table_dir, ref)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, p)
-    return new_id
+    return _commit(table_dir, _data_writer(df), ref=ref)
 
 
 def read_ref(spark: SparkSession, table_dir: str, ref: str) -> DataFrame | None:
@@ -966,10 +959,8 @@ def fast_forward(table_dir: str, from_ref: str, to_ref: str = "CURRENT") -> int:
     if sid is None:
         raise ValueError(f"unknown ref {from_ref!r}")
     p = _ref_path(table_dir, to_ref)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(sid))
-    os.replace(tmp, p)
+    with _FlipLock(table_dir):
+        _write_ptr(p, sid)
     return sid
 
 
@@ -1334,43 +1325,24 @@ ORDER BY step, change_type, segment
 # via a ``_parent`` pointer to the previous snapshot, so a read walks the
 # chain and unions segments after per-segment id-resolution.
 
-import json
-
-
-def _write_json_atomic(path: str, obj) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
-
-
-def _read_json(path: str):
-    with open(path) as f:
-        return json.load(f)
-
-
 def commit_snapshot_evolved(
     spark: SparkSession, df: DataFrame, table_dir: str
 ) -> int:
     """First commit of a schema-tracked table: field ids 1..n are
     assigned in column order and recorded both table-level (_schema)
     and segment-level (_fields)."""
-    os.makedirs(table_dir, exist_ok=True)
-    new_id = _next_snapshot_id(table_dir)
-    d = _snap_dir(table_dir, new_id)
-    df.write.mode("overwrite").parquet(d)
     fields = {c: i + 1 for i, c in enumerate(df.columns)}
     schema = [
         {"id": i + 1, "name": c, "type": df.schema[c].dataType.simpleString()}
         for i, c in enumerate(df.columns)
     ]
-    _write_json_atomic(os.path.join(d, "_fields.json"), fields)
-    _write_json_atomic(os.path.join(d, "_schema.json"), schema)
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+
+    def write(d: str) -> None:
+        df.write.mode("overwrite").parquet(d)
+        _write_ptr(os.path.join(d, "_fields.json"), fields)
+        _write_ptr(os.path.join(d, "_schema.json"), schema)
+
+    return _commit(table_dir, write)
 
 
 def _snapshot_schema(table_dir: str, snap_id: int) -> list[dict]:
@@ -1411,16 +1383,12 @@ def evolve_schema(
                 raise ValueError(f"column {name!r} already exists")
             schema.append({"id": next_id, "name": name, "type": typ})
             next_id += 1
-    new_id = _next_snapshot_id(table_dir)
-    d = _snap_dir(table_dir, new_id)
-    os.makedirs(d, exist_ok=True)
-    _write_json_atomic(os.path.join(d, "_schema.json"), schema)
-    _write_json_atomic(os.path.join(d, "_parent"), cur)
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+
+    def write(d: str) -> dict[str, int]:
+        _write_ptr(os.path.join(d, "_schema.json"), schema)
+        return {"_parent": cur}
+
+    return _commit(table_dir, write)
 
 
 def append_evolved(
@@ -1446,26 +1414,23 @@ def append_evolved(
     unknown = [c for c in df.columns if c not in by_name]
     if unknown:
         raise ValueError(f"columns not in schema: {unknown}")
-    new_id = _next_snapshot_id(table_dir)
-    d = _snap_dir(table_dir, new_id)
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition columns not in batch: {missing}")
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(d)
-        _write_json_atomic(os.path.join(d, "_spec.json"), partition_by)
-    else:
-        df.write.mode("overwrite").parquet(d)
-    _write_json_atomic(
-        os.path.join(d, "_fields.json"), {c: by_name[c] for c in df.columns}
-    )
-    _write_json_atomic(os.path.join(d, "_schema.json"), schema)
-    _write_json_atomic(os.path.join(d, "_parent"), cur)
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+    missing = [c for c in partition_by or [] if c not in df.columns]
+    if missing:
+        raise ValueError(f"partition columns not in batch: {missing}")
+
+    def write(d: str) -> dict[str, int]:
+        if partition_by:
+            df.write.mode("overwrite").partitionBy(*partition_by).parquet(d)
+            _write_ptr(os.path.join(d, "_spec.json"), partition_by)
+        else:
+            df.write.mode("overwrite").parquet(d)
+        _write_ptr(
+            os.path.join(d, "_fields.json"), {c: by_name[c] for c in df.columns}
+        )
+        _write_ptr(os.path.join(d, "_schema.json"), schema)
+        return {"_parent": cur}
+
+    return _commit(table_dir, write)
 
 
 def read_snapshot_evolved(
@@ -1504,8 +1469,7 @@ def read_snapshot_evolved(
                 for f in schema
             ]
             parts.append(seg.select(*cols))
-        data_p = os.path.join(d, "_parent")
-        sid = _read_json(data_p) if os.path.exists(data_p) else None
+        sid = _read_ptr(os.path.join(d, "_parent"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1575,8 +1539,7 @@ def read_evolved_pruned_eq(
                 dirs_total += 1
                 dirs_read += 1
                 parts.append(_mapped(spark.read.parquet(d)))
-        data_p = os.path.join(d, "_parent")
-        sid = _read_json(data_p) if os.path.exists(data_p) else None
+        sid = _read_ptr(os.path.join(d, "_parent"))
     if not parts:
         base = read_snapshot_evolved(spark, table_dir).limit(0)
         return base.where(F.col(col) == value), dirs_read, dirs_total
@@ -1712,20 +1675,7 @@ def merge_rows_mor(
         source if old_ins is None
         else old_ins.join(src_keys, key, "left_anti").unionByName(source)
     )
-    new_id = _next_snapshot_id(table_dir)
-    d = _snap_dir(table_dir, new_id)
-    _parallel_parquet_writes(
-        (all_tombs, os.path.join(d, "dv")), (ins, os.path.join(d, "ins"))
-    )
-    tmpb = os.path.join(d, "BASE.tmp")
-    with open(tmpb, "w") as f:
-        f.write(str(base_id))
-    os.replace(tmpb, os.path.join(d, "BASE"))
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
-    return new_id
+    return _commit(table_dir, _overlay_writer(base_id, all_tombs, ins))
 
 
 def table_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1843,26 +1793,24 @@ def rollback_to(table_dir: str, snapshot_id: int) -> int:
     orphan and (b) roll-FORWARD is just another rollback_to targeting
     the tagged id. Targets may be any retained snapshot at-or-below
     CURRENT or a tagged abandoned head."""
-    cur = current_snapshot_id(table_dir)
-    if cur is None:
+    if current_snapshot_id(table_dir) is None:
         raise ValueError("empty table")
-    if snapshot_id == cur:
-        return cur
-    if snapshot_id < 0 or (
-        snapshot_id > cur and snapshot_id not in _all_ref_ids(table_dir)
-    ):
-        raise ValueError(f"snapshot {snapshot_id} not committed (CURRENT={cur})")
-    if not os.path.isdir(_snap_dir(table_dir, snapshot_id)):
-        raise ValueError(f"snapshot {snapshot_id} expired or missing")
-    tag = _ref_path(table_dir, f"rollback-{cur}")
-    tmp = tag + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(cur))
-    os.replace(tmp, tag)
-    tmp = os.path.join(table_dir, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(snapshot_id))
-    os.replace(tmp, os.path.join(table_dir, "CURRENT"))
+    # read, check, tag and flip under the lock, so a commit landing in
+    # between can't leave its head untagged (and reusable as an orphan)
+    with _FlipLock(table_dir):
+        cur = current_snapshot_id(table_dir)
+        if snapshot_id == cur:
+            return cur
+        if snapshot_id < 0 or (
+            snapshot_id > cur and snapshot_id not in _all_ref_ids(table_dir)
+        ):
+            raise ValueError(
+                f"snapshot {snapshot_id} not committed (CURRENT={cur})"
+            )
+        if not os.path.isdir(_snap_dir(table_dir, snapshot_id)):
+            raise ValueError(f"snapshot {snapshot_id} expired or missing")
+        _write_ptr(_ref_path(table_dir, f"rollback-{cur}"), cur)
+        _write_ptr(_ref_path(table_dir, "CURRENT"), snapshot_id)
     return snapshot_id
 
 
@@ -1876,8 +1824,7 @@ def snapshot_history(table_dir: str) -> list[dict]:
         ov = _overlay_info(table_dir, sid)
         if ov is not None:
             kind, parent = "mor_overlay", ov[0]
-        elif os.path.exists(os.path.join(d, "_parent")):
-            parent = _read_json(os.path.join(d, "_parent"))
+        elif (parent := _read_ptr(os.path.join(d, "_parent"))) is not None:
             has_data = any(f.startswith("part-") or "=" in f
                            for f in os.listdir(d))
             kind = "append" if has_data else "evolution"

@@ -64,19 +64,8 @@ def read_bytes(path: str | Path) -> bytes:
     if not is_uri(p):
         with open(p, "rb") as f:
             return f.read()
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            f"Reading {p!r} requires an active SparkSession "
-            "(scheme-qualified driver-side reads go through the JVM Hadoop FileSystem)"
-        )
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI(p), conf)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(p))
+    _jvm, fs, jpath = _jvm_fs(p)
+    stream = fs.open(jpath)
     try:
         data = stream.readAllBytes()  # java.io.InputStream (Java 9+), py4j -> bytes
     finally:
@@ -91,14 +80,16 @@ def read_text(path: str | Path, encoding: str = "utf-8-sig") -> str:
 
 
 def _jvm_fs(path: str):
-    """(jvm, FileSystem, Path) triple for a URI — shared by writes/mkdirs."""
+    """(jvm, FileSystem, Path) triple for a URI — shared by reads,
+    writes and mkdirs."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError(
-            f"Writing {path!r} requires an active SparkSession "
-            "(scheme-qualified driver-side writes go through the JVM Hadoop FileSystem)"
+            f"Reading or writing {path!r} requires an active SparkSession "
+            "(scheme-qualified driver-side reads and writes go through the "
+            "JVM Hadoop FileSystem)"
         )
     sc = spark.sparkContext
     jvm = sc._jvm

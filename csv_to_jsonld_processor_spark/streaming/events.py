@@ -33,17 +33,7 @@ def hourly_rollup_batch(events: DataFrame) -> DataFrame:
 def hourly_rollup_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling-window rollup: late rows beyond the watermark
     are dropped; append-mode emits each window once it is final."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return hourly_rollup_batch(stream.withWatermark("ts", watermark))
 
 
 def sessionize_batch(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
@@ -61,16 +51,7 @@ def sessionize_batch(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
 
 
 def sessionize_stream(stream: DataFrame, watermark: str = "2 hours", gap: str = SESSION_GAP) -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
+    return sessionize_batch(stream.withWatermark("ts", watermark), gap)
 
 
 def run_stream_over_dir(

@@ -936,6 +936,53 @@ def test_optimistic_commit_detects_lost_update(spark, tmp_path):
     assert read_snapshot(spark, table).count() == 20
 
 
+@pytest.mark.parametrize("writer", ["delete", "update", "merge"])
+def test_overlay_writer_and_cas_commit_never_share_an_id(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A CAS commit that lands while a merge-on-read writer is writing
+    its generation gets its OWN id: the overlay writer claimed its id
+    under the commit lock before writing, so the CAS generation holds
+    only the CAS rows (no BASE, dv or ins mixed in) and the overlay
+    generation still reads back as its overlay of snapshot 0."""
+    from pyspark.sql import functions as F
+
+    from csv_to_jsonld_processor_spark.operators import snapshots as S
+
+    table = str(tmp_path / "t")
+    S.commit_snapshot(spark, spark.range(10).select(F.col("id").alias("k")), table)
+    parent = S.current_snapshot_id(table)
+    cas_df = spark.range(100, 130).select(F.col("id").alias("k"))
+    real_writes = S._parallel_parquet_writes
+    cas = {}
+
+    def racing_writes(*jobs):
+        # the CAS writer commits before the overlay's own files land
+        cas["id"] = S.commit_snapshot(spark, cas_df, table, expected_parent=parent)
+        real_writes(*jobs)
+
+    monkeypatch.setattr(S, "_parallel_parquet_writes", racing_writes)
+    if writer == "delete":
+        wid = S.delete_rows_mor(spark, table, "k >= 5")
+        want = set(range(5))
+    elif writer == "update":
+        wid = S.update_rows_mor(spark, table, "k >= 5", {"k": "k + 100"})
+        want = set(range(5)) | set(range(105, 110))
+    else:
+        src = spark.range(5, 15).select(F.col("id").alias("k"))
+        wid = S.merge_rows_mor(spark, table, src, "k")
+        want = set(range(15))
+
+    assert cas["id"] != wid
+    cas_dir = S._snap_dir(table, cas["id"])
+    assert not {"BASE", "dv", "ins"} & set(os.listdir(cas_dir))
+    assert {r["k"] for r in spark.read.parquet(cas_dir).collect()} == set(
+        range(100, 130)
+    )
+    assert S._overlay_info(table, wid)[0] == parent
+    assert {r["k"] for r in S.read_snapshot_mor(spark, table, wid).collect()} == want
+
+
 def test_flip_lock_breaks_stale_never_live(tmp_path):
     """The commit lock breaks only a lock FILE older than timeout_s
     (a crashed holder), never a live holder's or a freshly acquired
