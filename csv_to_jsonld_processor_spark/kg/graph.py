@@ -7,11 +7,16 @@ Unresolvable surfaces and link failures route to a ``violations`` table
 instead of killing the job — the reference's warn-vs-error
 ProcessingState (A7) re-expressed as data.
 
-Materialization writes ``entities`` / ``predicates`` / ``edges`` tables
-partitioned by a deterministic bucket of the subject (hash-bucketed so
-downstream joins/merges on subj are co-partitioned). The four tables
-are written by ``write_table`` as partitioned parquet paths under the
-output directory.
+Validation: the row-local rules (domain/range, node IRIs) are struct
+columns over an edge, checked together in one projection
+(``validate_rows``); cardinality is the one check that shuffles.
+
+Materialization writes ``edges`` and ``entities`` partitioned by a
+deterministic bucket of the subject (hash-bucketed so downstream
+joins/merges on subj are co-partitioned), ``predicates`` and
+``violations``, all as parquet paths under the output directory
+(``write_table``). The predicates table is counted while the edges are
+written, so it costs no pass of its own.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..session import local_df
+from ..sources.pages import PREDICATES
 from .mentions import LINKED_SCHEMA
 
 KG_TERMS = "http://example.org/kg/terms/"
@@ -104,44 +111,84 @@ def canonicalize_edges(linked: DataFrame, context: dict[str, str]) -> tuple[Data
     return ok, viol
 
 
-def validate_edges(edges: DataFrame, domain_range: dict[str, tuple[str, str]]) -> DataFrame:
-    """SHACL-style domain/range checks as DataFrame constraints (the
-    reference's picklist/domain validation J4/P5 re-expressed).
-
-    domain_range: canonical predicate IRI → (subj class, obj class).
-    Returns additional violations."""
-    want_domain = literal_map({p: d for p, (d, _r) in domain_range.items()})
-    want_range = literal_map({p: r for p, (_d, r) in domain_range.items()})
-    j = edges.withColumn("_want_domain", want_domain[F.col("pred")]) \
-        .withColumn("_want_range", want_range[F.col("pred")])
-    return (
-        j.where(
-            (F.col("subj_class") != F.col("_want_domain"))
-            | (F.col("obj_class") != F.col("_want_range"))
-        )
-        .select(
-            F.lit("shacl_domain_range").alias("stage"),
-            F.when(F.col("subj_class") != F.col("_want_domain"), F.lit("domain_mismatch"))
-            .otherwise(F.lit("range_mismatch"))
-            .alias("rule"),
-            F.col("subj"),
-            F.col("pred"),
-            F.concat_ws(" | ", "subj_class", "obj_class").alias("value"),
-            F.lit("warning").alias("severity"),
-        )
+def _rule(hit: F.Column, stage: str, rule: F.Column, value: F.Column) -> F.Column:
+    """One row rule over an edge: a struct of the violation columns and
+    ``hit``, whether the edge breaks the rule (null reads as no)."""
+    return F.struct(
+        hit.alias("hit"),
+        F.lit(stage).alias("stage"),
+        rule.alias("rule"),
+        F.col("subj"),
+        F.col("pred"),
+        value.alias("value"),
+        F.lit("warning").alias("severity"),
     )
+
+
+def domain_range_rule(domain_range: dict[str, tuple[str, str]]) -> F.Column:
+    """SHACL-style domain/range check (the reference's picklist/domain
+    validation J4/P5 re-expressed). domain_range: canonical predicate
+    IRI → (subj class, obj class); a predicate outside it is not checked."""
+    want_domain = literal_map({p: d for p, (d, _r) in domain_range.items()})[F.col("pred")]
+    want_range = literal_map({p: r for p, (_d, r) in domain_range.items()})[F.col("pred")]
+    bad_domain = F.col("subj_class") != want_domain
+    return _rule(
+        bad_domain | (F.col("obj_class") != want_range),
+        "shacl_domain_range",
+        F.when(bad_domain, F.lit("domain_mismatch")).otherwise(F.lit("range_mismatch")),
+        F.concat_ws(" | ", "subj_class", "obj_class"),
+    )
+
+
+def node_iri_rule() -> F.Column:
+    """sh:nodeKind sh:IRI + sh:pattern: every subject/object must be an
+    absolute IRI under the ids namespace and every predicate under the
+    terms namespace. A structural invariant of canonicalize_edges —
+    expected to hit ZERO rows on pipeline output (pytest-pinned); it
+    exists to catch foreign data merged into the edges table."""
+    import re as _re
+
+    id_pat = "^" + _re.escape(KG_IDS) + "[a-z0-9-]+/[a-z0-9-]+$"
+    term_pat = "^" + _re.escape(KG_TERMS) + "[A-Za-z0-9]+$"
+    bad_subj, bad_obj = ~F.col("subj").rlike(id_pat), ~F.col("obj").rlike(id_pat)
+    bad_pred = ~F.col("pred").rlike(term_pat)
+    return _rule(
+        bad_subj | bad_obj | bad_pred,
+        "shacl_node_kind",
+        F.when(bad_pred, F.lit("pred_not_term_iri"))
+        .when(bad_subj, F.lit("subj_not_id_iri"))
+        .otherwise(F.lit("obj_not_id_iri")),
+        F.col("obj"),
+    )
+
+
+def validate_rows(edges: DataFrame, rules: list[F.Column]) -> DataFrame:
+    """The violations of row-local ``rules`` (``domain_range_rule``,
+    ``node_iri_rule``) in ONE projection over ``edges``: each edge carries
+    the array of rules it breaks, which is then exploded. An edge that
+    breaks two rules gives two rows."""
+    hits = F.filter(F.array(*rules), lambda r: r["hit"])
+    return edges.select(F.explode(hits).alias("v")).select(
+        *(f"v.{c}" for c in ("stage", "rule", "subj", "pred", "value", "severity"))
+    )
+
+
+def validate_edges(edges: DataFrame, domain_range: dict[str, tuple[str, str]]) -> DataFrame:
+    """The domain/range violations of ``edges`` (see ``domain_range_rule``)."""
+    return validate_rows(edges, [domain_range_rule(domain_range)])
 
 
 def validate_cardinality(edges: DataFrame, max_counts: dict[str, int]) -> DataFrame:
     """sh:maxCount as a groupBy constraint: a subject whose DISTINCT
     object count for a functional predicate exceeds the cap is a
-    violation (e.g. two different birthPlaces). One partial-aggregated
-    groupBy on (subj, pred) — at 100 TB the shuffle carries only the
-    (subj, pred) key space of the capped predicates, filtered before it."""
+    violation (e.g. two different birthPlaces). One exchange: the
+    per-(subj, pred) object sets are partially aggregated before the
+    shuffle (``size(collect_set)``; ``countDistinct`` plans two), and
+    the capped predicates are filtered before it."""
     caps = {p: int(c) for p, c in max_counts.items()}
     counts = (
         edges.where(F.col("pred").isin(list(caps)))
-        .groupBy("subj", "pred").agg(F.countDistinct("obj").alias("n_obj"))
+        .groupBy("subj", "pred").agg(F.size(F.collect_set("obj")).alias("n_obj"))
         .withColumn("_max_count", literal_map(caps)[F.col("pred")])
     )
     return (
@@ -158,52 +205,39 @@ def validate_cardinality(edges: DataFrame, max_counts: dict[str, int]) -> DataFr
 
 
 def validate_node_iris(edges: DataFrame) -> DataFrame:
-    """sh:nodeKind sh:IRI + sh:pattern: every subject/object must be an
-    absolute IRI under the ids namespace and every predicate under the
-    terms namespace. A structural invariant of canonicalize_edges —
-    expected to emit ZERO rows on pipeline output (pytest-pinned); it
-    exists to catch foreign data merged into the edges table."""
-    import re as _re
-
-    id_pat = "^" + _re.escape(KG_IDS) + "[a-z0-9-]+/[a-z0-9-]+$"
-    term_pat = "^" + _re.escape(KG_TERMS) + "[A-Za-z0-9]+$"
-    bad = edges.where(
-        ~F.col("subj").rlike(id_pat)
-        | ~F.col("obj").rlike(id_pat)
-        | ~F.col("pred").rlike(term_pat)
-    )
-    return bad.select(
-        F.lit("shacl_node_kind").alias("stage"),
-        F.when(~F.col("pred").rlike(term_pat), F.lit("pred_not_term_iri"))
-        .when(~F.col("subj").rlike(id_pat), F.lit("subj_not_id_iri"))
-        .otherwise(F.lit("obj_not_id_iri"))
-        .alias("rule"),
-        F.col("subj"),
-        F.col("pred"),
-        F.col("obj").alias("value"),
-        F.lit("warning").alias("severity"),
-    )
+    """The node-kind violations of ``edges`` (see ``node_iri_rule``)."""
+    return validate_rows(edges, [node_iri_rule()])
 
 
 def with_bucket(df: DataFrame, key: str = "subj", n: int = N_BUCKETS) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int"))
 
 
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
+                **observed: F.Column) -> dict:
     """Overwrites ``path`` with ``df`` as parquet, partitioned by
-    ``partition_by``, and returns the row count observed while writing."""
+    ``partition_by``, and returns the row count ``n`` and the ``observed``
+    aggregates, all computed while writing."""
     obs = Observation()
-    w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+    aggs = [c.alias(name) for name, c in observed.items()]
+    w = df.observe(obs, F.count(F.lit(1)).alias("n"), *aggs).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-    return obs.get["n"]
+    return obs.get
 
 
-def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> dict:
+def materialize_graph(
+    edges: DataFrame, violations: DataFrame, out_dir: str, predicates: list[tuple] = PREDICATES
+) -> dict:
     """entities/predicates/edges/violations — entities deduped from both
     edge endpoints (the reference's merge-by-@id A1 over the graph).
-    Each table's row count is observed while it is written, not read back."""
+    Each table's row count is observed while it is written, not read back.
+
+    The ``predicates`` table (iri, n_edges) is counted while the edges are
+    written, one ``count_if`` per vocabulary predicate, and written from
+    the driver: no job re-reads the edges for it. An edge whose predicate
+    is outside the vocabulary raises ValueError instead of being dropped."""
     subj_side = edges.select(
         F.col("subj").alias("iri"), F.col("subj_name").alias("label"),
         F.col("subj_class").alias("entity_class"),
@@ -213,13 +247,25 @@ def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> 
         F.col("obj_class").alias("entity_class"),
     )
     entities = subj_side.unionByName(obj_side).dropDuplicates(["iri"])
-    predicates = (
-        edges.groupBy("pred").agg(F.count(F.lit(1)).alias("n_edges"))
-        .withColumnRenamed("pred", "iri")
+    vocab = sorted(set(predicate_context(predicates).values()))
+    written = write_table(
+        with_bucket(edges), f"{out_dir}/edges", ["bucket"],
+        **{f"p{i}": F.count_if(F.col("pred") == iri) for i, iri in enumerate(vocab)},
     )
+    n_edges = [(iri, written[f"p{i}"]) for i, iri in enumerate(vocab)]
+    in_vocab = sum(n for _iri, n in n_edges)
+    if in_vocab != written["n"]:
+        raise ValueError(
+            f"materialize_graph: {written['n']} edges written to {out_dir}/edges, but only "
+            f"{in_vocab} have a predicate in the vocabulary {vocab}"
+        )
+    # one file: a local relation is split over the default parallelism
+    pred_table = local_df(
+        edges.sparkSession, [r for r in n_edges if r[1]], "iri string, n_edges bigint not null"
+    ).coalesce(1)
     return {
-        "edges": write_table(with_bucket(edges), f"{out_dir}/edges", ["bucket"]),
-        "entities": write_table(with_bucket(entities, "iri"), f"{out_dir}/entities", ["bucket"]),
-        "predicates": write_table(predicates, f"{out_dir}/predicates"),
-        "violations": write_table(violations, f"{out_dir}/violations"),
+        "edges": written["n"],
+        "entities": write_table(with_bucket(entities, "iri"), f"{out_dir}/entities", ["bucket"])["n"],
+        "predicates": write_table(pred_table, f"{out_dir}/predicates")["n"],
+        "violations": write_table(violations, f"{out_dir}/violations")["n"],
     }

@@ -23,11 +23,12 @@ from ..sources.pages import ENTITIES, PREDICATES
 from .mentions import extract_link_from_html, extract_mentions_from_html
 from .graph import (
     canonicalize_edges,
+    domain_range_rule,
     materialize_graph,
+    node_iri_rule,
     predicate_context,
     validate_cardinality,
-    validate_edges,
-    validate_node_iris,
+    validate_rows,
 )
 from .link import kb_alias_table, kb_index, link_mentions
 
@@ -47,12 +48,11 @@ MAX_COUNTS = {
 
 
 def _all_violations(canon_viol: DataFrame, edges: DataFrame) -> DataFrame:
-    """canonicalize's link/context rows + the three SHACL-style checks on edges."""
-    return (
-        canon_viol.unionByName(validate_edges(edges, DOMAIN_RANGE))
-        .unionByName(validate_cardinality(edges, MAX_COUNTS))
-        .unionByName(validate_node_iris(edges))
-    )
+    """canonicalize's link/context rows + the SHACL-style checks on edges:
+    the row rules (domain/range, node IRIs) as one projection, and
+    cardinality, the one check that shuffles."""
+    rows = validate_rows(edges, [domain_range_rule(DOMAIN_RANGE), node_iri_rule()])
+    return canon_viol.unionByName(rows).unionByName(validate_cardinality(edges, MAX_COUNTS))
 
 
 def _surfaces_and_gazetteer(
@@ -94,7 +94,7 @@ def build_kg(
     viol = _all_violations(viol, edges)
     result = {"edges": edges, "violations": viol}
     if out_dir:
-        result["counts"] = materialize_graph(edges, viol, out_dir)
+        result["counts"] = materialize_graph(edges, viol, out_dir, predicates)
     return result
 
 

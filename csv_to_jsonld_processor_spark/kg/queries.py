@@ -733,8 +733,9 @@ KG_ENTITY_TABLE_SQL = _entity_table_sql()
 
 def kg_predicate_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized PREDICATE table (iri, n_edges) of the flagship
-    run — same aggregation as materialize_graph. Oracle derives the
-    counts from the generator-anchored golden edge table."""
+    run: the per-predicate edge counts materialize_graph observes while
+    it writes the edges, here as a groupBy. Oracle derives the counts
+    from the generator-anchored golden edge table."""
     edges = kg_webtext_edges(spark, sf_dir)
     return (
         edges.groupBy("pred")

@@ -37,33 +37,13 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..operators.snapshots import current_snapshot_id, snapshot_ids
+
 # --- pure-pyarrow snapshot-table reading (no SparkSession available) ---------
-
-
-def _current(table_dir: str) -> int | None:
-    p = os.path.join(table_dir, "CURRENT")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
 
 
 def _snap_dir(table_dir: str, sid: int) -> str:
     return os.path.join(table_dir, f"snap-{sid:06d}")
-
-
-def _committed_ids(table_dir: str) -> list[int]:
-    import re
-
-    cur = _current(table_dir)
-    if cur is None:
-        return []
-    pat = re.compile(r"^snap-(\d{6})$")
-    return sorted(
-        int(m.group(1))
-        for name in os.listdir(table_dir)
-        if (m := pat.match(name)) and int(m.group(1)) <= cur
-    )
 
 
 def _overlay(table_dir: str, sid: int) -> tuple[int, str, str | None] | None:
@@ -90,7 +70,7 @@ def _schema_of(table_dir: str) -> tuple[list[str], "object"]:
     """(column names, pyarrow schema) of the table's base data."""
     import pyarrow.parquet as pq
 
-    cur = _current(table_dir)
+    cur = current_snapshot_id(table_dir)
     if os.path.exists(os.path.join(_snap_dir(table_dir, cur), "_parent")):
         raise ValueError(
             "tablechanges does not stream schema-evolution/append chains "
@@ -231,7 +211,7 @@ class TableChangesStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         lo = int(start["snap"])
-        nxt = [sid for sid in _committed_ids(self.table_dir) if sid > lo]
+        nxt = [sid for sid in snapshot_ids(self.table_dir) if sid > lo]
         if not nxt:
             return iter([]), {"snap": lo}
         hi = nxt[0]

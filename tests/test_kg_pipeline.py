@@ -141,7 +141,9 @@ def test_build_kg_out_dir_paths(spark, pages, tmp_path):
 def test_build_kg_out_dir_job_ceiling(spark, pages, tmp_path):
     """The rule tables (context, domain/range, maxCount) are column
     expressions, not broadcast DataFrames, so none of them launches a
-    job: a warm build_kg(out_dir=) call runs at most 8 (15 with joins)."""
+    job; the predicates table is counted while the edges are written and
+    the cardinality check shuffles once. A warm build_kg(out_dir=) call
+    runs 6 jobs: edges 1, entities 2, predicates 1, violations 2."""
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
     build_kg(spark, pages, out_dir=str(tmp_path / "warm"))
@@ -153,7 +155,7 @@ def test_build_kg_out_dir_job_ceiling(spark, pages, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 8, jobs
+    assert jobs <= 6, jobs
 
 
 def test_literal_map_reads_missing_keys_as_null(spark):
@@ -181,9 +183,10 @@ def test_fused_graph_plans_have_no_join(spark, pages):
 
 
 def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path):
-    """With out_dir every sink (edges, entities, predicates, the four
-    violation branches) reads one computed linked relation: each page
-    row crosses into the Python stage exactly once."""
+    """With out_dir every sink (edges, entities, and the three violation
+    branches: canonicalize's rows, the row rules, cardinality) reads one
+    computed linked relation: each page row crosses into the Python stage
+    exactly once."""
     from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
 
     log = str(tmp_path / "tap.log")
@@ -199,6 +202,67 @@ def test_build_kg_out_dir_runs_python_stage_once(spark, pages, tmp_path):
     with open(log) as f:
         crossed = sum(int(line) for line in f)
     assert crossed == pages.count()
+
+
+# The parquet schemas of the four sinks: (name, type, nullable) per
+# column, the bucket partition column aside
+SINK_SCHEMAS = {
+    "edges": [
+        ("subj", "string", True), ("pred", "string", True), ("obj", "string", True),
+        ("subj_name", "string", True), ("subj_class", "string", True),
+        ("obj_name", "string", True), ("obj_class", "string", True),
+        ("url", "string", True), ("sent_idx", "int32", True),
+    ],
+    "entities": [("iri", "string", True), ("label", "string", True),
+                 ("entity_class", "string", True)],
+    "predicates": [("iri", "string", True), ("n_edges", "int64", False)],
+    "violations": [
+        ("stage", "string", False), ("rule", "string", False), ("subj", "string", True),
+        ("pred", "string", True), ("value", "string", True), ("severity", "string", False),
+    ],
+}
+
+
+def test_build_kg_sink_schemas(spark, pages, tmp_path):
+    """The four tables keep their column names, types and nullability:
+    the predicates counts written from the driver and the violation
+    columns of the exploded row rules stay non-null."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    out = str(tmp_path / "kg")
+    build_kg(spark, pages, out_dir=out)
+    for name, want in SINK_SCHEMAS.items():
+        files = sorted(glob.glob(f"{out}/{name}/**/*.parquet", recursive=True))
+        schema = pq.read_schema(files[0])
+        assert [(f.name, str(f.type), f.nullable) for f in schema] == want, name
+
+
+def test_materialize_graph_rejects_predicate_outside_vocabulary(spark, tmp_path):
+    """The predicates table is counted per vocabulary predicate: an edge
+    whose predicate is not in ``predicates`` is an error, not a row
+    silently left out of the table."""
+    from csv_to_jsonld_processor_spark.kg.graph import (
+        KG_IDS,
+        KG_TERMS,
+        materialize_graph,
+        validate_node_iris,
+    )
+
+    person, org = f"{KG_IDS}person/a", f"{KG_IDS}organization/b"
+    edges = spark.createDataFrame(
+        [
+            (person, f"{KG_TERMS}worksFor", org, "A", "Person", "B", "Organization", "u", 0),
+            (person, f"{KG_TERMS}marriedTo", org, "A", "Person", "B", "Organization", "u", 1),
+        ],
+        "subj string, pred string, obj string, subj_name string, subj_class string, "
+        "obj_name string, obj_class string, url string, sent_idx int",
+    )
+    with pytest.raises(ValueError, match="vocabulary"):
+        materialize_graph(edges, validate_node_iris(edges), str(tmp_path / "kg"))
 
 
 @pytest.mark.parametrize("empty", ["limit_0", "no_en_page"])

@@ -230,3 +230,44 @@ def test_stream_restart_exactly_once(spark, tmp_path):
         }
         assert have == want, sid
         prev = sid
+
+
+def test_stream_skips_a_conflicted_cas_generation(spark, tmp_path):
+    """A CAS writer that loses a conflict leaves a RESERVED generation
+    below CURRENT once its retry lands. The changelog stream lists the
+    committed ids the snapshot layer lists, so its next offset after the
+    winner's snapshot is the retry's id, never the conflicted one."""
+    from pyspark.sql import functions as F
+
+    from csv_to_jsonld_processor_spark.operators.snapshots import (
+        CommitConflict,
+        commit_snapshot,
+        read_changes,
+        snapshot_ids,
+    )
+    from csv_to_jsonld_processor_spark.sources.tablechanges import TableChangesStreamReader
+
+    table = str(tmp_path / "t")
+    commit_snapshot(spark, spark.range(10).select(F.col("id").alias("k")), table)
+    a_df = spark.range(20).select(F.col("id").alias("k"))
+    b_id = commit_snapshot(spark, spark.range(30).select(F.col("id").alias("k")), table,
+                           expected_parent=0)
+    with pytest.raises(CommitConflict):
+        commit_snapshot(spark, a_df, table, expected_parent=0)
+    a_id = commit_snapshot(spark, a_df, table, expected_parent=b_id)
+    assert b_id == 1 and a_id > 2
+    assert snapshot_ids(table) == [0, 1, a_id]
+
+    reader = TableChangesStreamReader({"table_dir": table})
+    offsets, off = [], reader.initialOffset()
+    while True:
+        rows, nxt = reader.read(off)
+        if nxt == off:
+            break
+        offsets.append((nxt["snap"], sorted(rows)))
+        off = nxt
+    assert [sid for sid, _rows in offsets] == [1, a_id]
+    # the batch for a_id is the change 1 → a_id, not a diff against the
+    # conflicted generation
+    want = sorted((r["k"], r["_change_type"], a_id) for r in read_changes(spark, table, 1, a_id).collect())
+    assert offsets[1][1] == want
